@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Timing harness for operator VARIANTS that are deliberately not in
   * `SparkEntry.queries` (no DuckDB oracle — e.g. data-dependent plan
@@ -36,33 +37,7 @@ object AuxBench {
         saturated(s)(operators.Graph.graphTriangles(s, d))),
     "graph_kcore_saturated" ->
       ((s: SparkSession, d: String) =>
-        saturated(s)(operators.Curation.graphKcore(s, d))),
-    // edge-derivation A/B: per-order collect_set + map-side pair
-    // explosion + plain count vs the registered self-join +
-    // countDistinct
-    "graph_pagerank_setedges" ->
-      ((s: SparkSession, d: String) =>
-        operators.Graph.graphPagerankViaSets(s, d)),
-    // edge-derivation A/B: dedup (order, part) BEFORE the self-join,
-    // plain count after (no countDistinct expand) vs the registered
-    // join + countDistinct
-    "graph_pagerank_distinctedges" ->
-      ((s: SparkSession, d: String) =>
-        operators.Graph.graphPagerankViaDistinct(s, d)),
-    // the pre-round-18 registered derivation (raw self-join +
-    // countDistinct), kept as the other side of the A/B
-    "graph_pagerank_joinedges" ->
-      ((s: SparkSession, d: String) =>
-        operators.Graph.graphPagerankViaJoin(s, d)),
-    // r13 agg_spearman A/B: the r12 join-back shape vs the registered
-    // value-level-moments shape, plus the (flag, y) partial-agg +
-    // rank-window piece on its own (the serial-window suspect)
-    "agg_spearman_joinback" ->
-      ((s: SparkSession, d: String) =>
-        operators.Crest.aggSpearmanJoinback(s, d)),
-    "agg_spearman_ymap" ->
-      ((s: SparkSession, d: String) =>
-        operators.Crest.aggSpearmanYmap(s, d)))
+        saturated(s)(operators.Curation.graphKcore(s, d))))
 
   /** Build a plan under the saturated-cluster profile (the conf is
     * consulted at plan-build time, so resetting it after construction
@@ -88,7 +63,7 @@ object AuxBench {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[aux] failed: ${e.getMessage}"); -1.0
       }
     }

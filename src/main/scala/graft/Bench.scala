@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints exactly one JSON line (raw stdout — build.sbt routes forked run
   * output through StdoutOutput so the driver's parser sees it unprefixed).
   *
   * A query that throws is reported as -1 seconds (never as a fake fast
-  * timing) and excluded from the total.
+  * timing) and excluded from the total; a fatal JVM error (out of
+  * memory, a linkage error) aborts the run instead.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -38,7 +40,7 @@ object Bench {
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap
     picked.foreach { case (_, fn) =>
-      try run(fn(spark, warmDir)) catch { case _: Throwable => () }
+      try run(fn(spark, warmDir)) catch { case NonFatal(_) => () }
     }
     // two timed passes, keep the per-query minimum: the box shows
     // ±30-50% run-to-run noise and min-of-N is the standard estimator
@@ -54,7 +56,7 @@ object Bench {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
     }

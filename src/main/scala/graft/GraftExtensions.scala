@@ -7,70 +7,76 @@ import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, LogicalPlan, Resol
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-/** Session-extension packaging: a cluster deploy adds
-  * `--conf spark.sql.extensions=graft.GraftExtensions` and every graft
-  * native function (and the KMV aggregate) is available in SQL on every
-  * session — no per-session `register` call, works from pure-SQL
-  * clients too.
+/** graft's one native-function table, plus its catalyst rules.
+  *
+  * Every graft SQL function is bound here and nowhere else. Sessions get
+  * the table when they are built: `GraftSession` (and the test session)
+  * call `withExtensions(new GraftExtensions()(_))`, and a cluster deploy
+  * adds `--conf spark.sql.extensions=graft.GraftExtensions`. Sessions
+  * derived from an extended one (`newSession`, streaming clones) inherit
+  * it, and pure-SQL clients resolve the same names.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.functions", name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
+    import graft.functions._
     import graft.functions.Hashes._
     def inject(name: String, builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name), info(name, name), builder))
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), builder))
+    def int(e: Expression): Int = e.eval(null).asInstanceOf[Int]
 
     inject("simhash64", es => SimHash64(es.head))
-    inject("simhash_md5", es => SimHashMd5(es(0),
-      es(1).eval(null).asInstanceOf[Int]))
-    inject("minhash_sig", es => MinHashSig(es.head,
-      es(1).eval(null).asInstanceOf[Int]))
-    inject("minhash_sig_from_hashes", es => MinHashFromHashes(es.head,
-      es(1).eval(null).asInstanceOf[Int]))
-    inject("ngram_hashes", es => NgramHashes(es(0),
-      es(1).eval(null).asInstanceOf[Int]))
-    inject("ngram_md5_hashes", es => NgramMd5Hashes(es(0),
-      es(1).eval(null).asInstanceOf[Int]))
+    inject("simhash_md5", es => SimHashMd5(es(0), int(es(1))))
+    inject("simhash_from_hashes", es => SimHashFromHashes(es.head))
+    inject("minhash_sig", es => MinHashSig(es.head, int(es(1))))
+    inject("minhash_sig_from_hashes",
+      es => MinHashFromHashes(es.head, int(es(1))))
+    inject("ngram_hashes", es => NgramHashes(es(0), int(es(1))))
+    inject("ngram_md5_hashes", es => NgramMd5Hashes(es(0), int(es(1))))
     inject("hash_array", es => HashArray(es.head))
     inject("intersect_count", es => IntersectCount(es(0), es(1)))
     inject("cosine_f32", es => CosineF32(es(0), es(1)))
-    inject("rhp_bucket", es => RhpBucket(es(0),
-      es(1).eval(null).asInstanceOf[Int]))
-    inject("md5_rhp_bucket", es => Md5RhpBucket(es(0),
-      es(1).eval(null).asInstanceOf[Int]))
-    inject("kmv_distinct", es => graft.functions.KmvSketch(es(0),
-      es(1).eval(null).asInstanceOf[Int]).toAggregateExpression())
-    inject("mg_topk", es => graft.functions.MisraGries(es(0),
-      es(1).eval(null).asInstanceOf[Int]).toAggregateExpression())
+    inject("rhp_bucket", es => RhpBucket(es(0), int(es(1))))
+    inject("md5_rhp_bucket", es => Md5RhpBucket(es(0), int(es(1))))
     inject("phash64", es => Phash64(es.head))
-    inject("bloom_agg", es => graft.functions.BloomAgg(es(0),
-      es(1).eval(null).asInstanceOf[Int],
-      es(2).eval(null).asInstanceOf[Int]).toAggregateExpression())
-    inject("bloom_any", es => graft.functions.BloomMightContainAny(
-      es(0), es(1), es(2).eval(null).asInstanceOf[Int],
-      es(3).eval(null).asInstanceOf[Int]))
-    inject("cms_agg", es => graft.functions.CountMinAgg(es(0),
-      es(1).eval(null).asInstanceOf[Int],
-      es(2).eval(null).asInstanceOf[Int]).toAggregateExpression())
-    inject("cms_est", es => graft.functions.CountMinEstimate(es(0), es(1),
-      es(2).eval(null).asInstanceOf[Int],
-      es(3).eval(null).asInstanceOf[Int]))
-    inject("hll_agg",
-      es => graft.functions.HllSketch(es(0)).toAggregateExpression())
+    inject("kmv_distinct",
+      es => KmvSketch(es(0), int(es(1))).toAggregateExpression())
+    inject("mg_topk",
+      es => MisraGries(es(0), int(es(1))).toAggregateExpression())
+    inject("bloom_agg", es => BloomAgg(es(0), int(es(1)), int(es(2)))
+      .toAggregateExpression())
+    inject("bloom_any", es => BloomMightContainAny(es(0), es(1),
+      int(es(2)), int(es(3))))
+    inject("cms_agg", es => CountMinAgg(es(0), int(es(1)), int(es(2)))
+      .toAggregateExpression())
+    inject("cms_est", es => CountMinEstimate(es(0), es(1),
+      int(es(2)), int(es(3))))
+    inject("hll_agg", es => HllSketch(es(0)).toAggregateExpression())
     inject("hll_regs",
-      es => graft.functions.HllSketch(es(0), emitRegisters = true)
-        .toAggregateExpression())
-    inject("qdigest_quantile", es => graft.functions.QuantileSketch(es(0),
-      es(1).eval(null) match {
+      es => HllSketch(es(0), emitRegisters = true).toAggregateExpression())
+    // the two builders below check their arguments: a wrong arity or a
+    // non-literal fails with a readable message, and an integral literal
+    // is accepted, instead of a MatchError/ClassCastException from the
+    // cast chain
+    inject("qdigest_quantile", es => {
+      require(es.length == 2,
+        s"qdigest_quantile(value, q) takes 2 arguments, got ${es.length}")
+      require(es(1).foldable,
+        "qdigest_quantile: q must be a literal (foldable) expression, " +
+          s"got ${es(1).sql}")
+      val q = es(1).eval(null) match {
         case d: java.lang.Double => d.doubleValue()
         case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      }).toAggregateExpression())
-    // same argument contract as SampleSketch.register — a BIGINT k or
-    // wrong arity must fail with the registration-path error message,
-    // not a ClassCastException/IndexOutOfBounds from the cast chain
+        case i: java.lang.Integer => i.doubleValue()
+        case l: java.lang.Long => l.doubleValue()
+        case f: java.lang.Float => f.doubleValue()
+        case other => throw new IllegalArgumentException(
+          s"qdigest_quantile: q must be numeric, got $other " +
+            s"(${es(1).dataType})")
+      }
+      QuantileSketch(es(0), q).toAggregateExpression()
+    })
     inject("bottomk_sample", es => {
       require(es.length == 4,
         "bottomk_sample(hash, id, value, k) takes 4 arguments, got " +
@@ -83,8 +89,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"bottomk_sample: k must be integral, got $other")
       }
       require(k > 0, s"bottomk_sample: k must be positive, got $k")
-      graft.functions.SampleSketch(es(0), es(1), es(2), k)
-        .toAggregateExpression()
+      SampleSketch(es(0), es(1), es(2), k).toAggregateExpression()
     })
 
     ext.injectPostHocResolutionRule(BroadcastDimTables)

@@ -8,8 +8,14 @@ import org.apache.spark.sql.SparkSession
   * AQE is on for runtime shuffle coalescing and skew-join splitting;
   * shuffle partitions default to the local core count (a cluster deploy
   * overrides via --conf, and AQE re-coalesces anyway); UTC timezone so
-  * timestamp math is environment-independent; graft's native function
-  * suite is registered up front.
+  * timestamp math is environment-independent; parquet TIMESTAMP(NANOS)
+  * columns (the `events` log) read as epoch-nanos longs.
+  *
+  * The session is built with `GraftExtensions`, so graft's SQL
+  * functions, `BroadcastDimTables` and the off-by-default
+  * `ApproxDistinctRewrite` are in every session it returns and in every
+  * session derived from it — the same setup a cluster deploy gets from
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftSession {
 
@@ -19,8 +25,13 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .withExtensions(new GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
+      // Spark's parquet reader rejects TIMESTAMP(NANOS); read it as raw
+      // epoch-nanos longs (exact — a ns→us cast would lose sub-microsecond
+      // order). `Tables.eventsUs` normalizes either landed type.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // coalesce by size, not core count: tiny post-shuffle partitions
@@ -38,7 +49,6 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    functions.Hashes.register(spark)
     spark
   }
 }

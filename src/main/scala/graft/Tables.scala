@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Schema-stable loaders for the driver-generated testdata tables.
   *
   * Every `SparkEntry.queries` entry receives `(spark, sfDir)` and loads
-  * through here, so path handling / nanos-timestamp quirks are fixed in
-  * one place. Modeled on the reference catalog's collections
+  * through here, so path handling is fixed in one place. Modeled on
+  * the reference catalog's collections
   * (jobs / files / events — see /root/reference/reactor.py:119-218):
   * `events` is the job event log, `documents` the archived outputs.
   */
@@ -15,17 +15,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** events.parquet carries TIMESTAMP(NANOS) which Spark's parquet reader
-    * rejects; read it as raw epoch-nanos longs instead (exact, no
-    * truncation — a ns→us cast would lose sub-microsecond order).
+  /** Plain parquet read. `events` carries TIMESTAMP(NANOS), which the
+    * session reads as epoch-nanos longs (`spark.sql.legacy.parquet.
+    * nanosAsLong`, set by `GraftSession` when the session is built).
     */
-  private def nanosAsLong(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") nanosAsLong(spark)
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Loader for COMPUTE-HEAVY consumers: the testdata parquets are
     * single-row-group files, so the scan (and any expensive map-side

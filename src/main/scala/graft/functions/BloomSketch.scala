@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -159,22 +158,5 @@ object BloomSketch {
       i += 1
     }
     true
-  }
-
-  /** Register `bloom_agg(hashes, mBits, k)` and
-    * `bloom_any(bloom, hashes, mBits, k)` on the session.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_agg",
-      (es: Seq[Expression]) => BloomAgg(es(0),
-        es(1).eval(null).asInstanceOf[Int],
-        es(2).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("bloom_any",
-      (es: Seq[Expression]) => BloomMightContainAny(es(0), es(1),
-        es(2).eval(null).asInstanceOf[Int],
-        es(3).eval(null).asInstanceOf[Int]),
-      "built-in")
   }
 }

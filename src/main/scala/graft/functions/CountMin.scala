@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -133,20 +132,5 @@ object CountMin {
     // first 4 bytes == first 8 hex chars, unsigned
     val v = java.lang.Integer.toUnsignedLong(ByteBuffer.wrap(digest).getInt)
     (v % w).toInt
-  }
-
-  /** Register `cms_agg(key, w, d)` and `cms_est(cms, key, w, d)`. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cms_agg",
-      (es: Seq[Expression]) => CountMinAgg(es(0),
-        es(1).eval(null).asInstanceOf[Int],
-        es(2).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("cms_est",
-      (es: Seq[Expression]) => CountMinEstimate(es(0), es(1),
-        es(2).eval(null).asInstanceOf[Int],
-        es(3).eval(null).asInstanceOf[Int]),
-      "built-in")
   }
 }

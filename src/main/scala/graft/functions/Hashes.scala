@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -488,45 +487,5 @@ object Hashes {
     }
     override protected def withNewChildInternal(c: Expression): RhpBucket =
       copy(child = c)
-  }
-
-  /** Idempotent session registration; after this,
-    * `expr("simhash64(grams)")` etc. work anywhere.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      (es: Seq[Expression]) => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      (es: Seq[Expression]) => MinHashSig(es.head,
-        es(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig_from_hashes",
-      (es: Seq[Expression]) => MinHashFromHashes(es.head,
-        es(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("hash_array",
-      (es: Seq[Expression]) => HashArray(es.head), "built-in")
-    reg.createOrReplaceTempFunction("intersect_count",
-      (es: Seq[Expression]) => IntersectCount(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cosine_f32",
-      (es: Seq[Expression]) => CosineF32(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("ngram_hashes",
-      (es: Seq[Expression]) => NgramHashes(es(0),
-        es(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("simhash_from_hashes",
-      (es: Seq[Expression]) => SimHashFromHashes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("rhp_bucket",
-      (es: Seq[Expression]) => RhpBucket(es(0),
-        es(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("ngram_md5_hashes",
-      (es: Seq[Expression]) => NgramMd5Hashes(es(0),
-        es(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("simhash_md5",
-      (es: Seq[Expression]) => SimHashMd5(es(0),
-        es(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("md5_rhp_bucket",
-      (es: Seq[Expression]) => Md5RhpBucket(es(0),
-        es(1).eval(null).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("phash64",
-      (es: Seq[Expression]) => Phash64(es.head), "built-in")
   }
 }

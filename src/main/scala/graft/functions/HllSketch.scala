@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -161,20 +160,5 @@ object HllSketch {
       if (rho > regs(idx)) regs(idx) = rho
     }
     regs.map(r => BigInt(1) << (56 - r)).sum
-  }
-
-  /** Register `hll_agg(value)` (integer S) and `hll_regs(value)` (the
-    * raw register array, for streamed partials) on the session.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_agg",
-      (es: Seq[Expression]) => HllSketch(es(0)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_regs",
-      (es: Seq[Expression]) =>
-        HllSketch(es(0), emitRegisters = true).toAggregateExpression(),
-      "built-in")
   }
 }

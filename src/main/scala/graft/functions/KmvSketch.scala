@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -102,14 +101,4 @@ case class KmvSketch(
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): KmvSketch =
     copy(inputAggBufferOffset = o)
-}
-
-object KmvSketch {
-  /** Register `kmv_distinct(hashes, k)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_distinct",
-      (es: Seq[Expression]) => KmvSketch(es(0),
-        es(1).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -138,14 +137,4 @@ case class MisraGries(
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): MisraGries =
     copy(inputAggBufferOffset = o)
-}
-
-object MisraGries {
-  /** Register `mg_topk(item, k)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk",
-      (es: Seq[Expression]) => MisraGries(es(0),
-        es(1).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -132,28 +131,4 @@ object QuantileSketch {
   def lowerBound(b: Int): Long =
     if (b < 16) b.toLong
     else ((b % 8 + 8).toLong) << (b / 8 - 1)
-
-  /** Register `qdigest_quantile(value, q)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "qdigest_quantile",
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"qdigest_quantile(value, q) takes 2 arguments, got ${es.length}")
-        require(es(1).foldable,
-          "qdigest_quantile: q must be a literal (foldable) expression, " +
-            s"got ${es(1).sql}")
-        val q = es(1).eval(null) match {
-          case d: java.lang.Double => d.doubleValue()
-          case d: org.apache.spark.sql.types.Decimal => d.toDouble
-          case i: java.lang.Integer => i.doubleValue()
-          case l: java.lang.Long => l.doubleValue()
-          case f: java.lang.Float => f.doubleValue()
-          case other => throw new IllegalArgumentException(
-            s"qdigest_quantile: q must be numeric, got $other " +
-              s"(${es(1).dataType})")
-        }
-        QuantileSketch(es(0), q).toAggregateExpression()
-      },
-      "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -107,26 +106,4 @@ case class SampleSketch(
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): SampleSketch =
     copy(inputAggBufferOffset = o)
-}
-
-object SampleSketch {
-  /** Register `bottomk_sample(hash, id, value, k)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottomk_sample",
-      (es: Seq[Expression]) => {
-        require(es.length == 4,
-          "bottomk_sample(hash, id, value, k) takes 4 arguments, got " +
-            es.length)
-        require(es(3).foldable, "bottomk_sample: k must be a literal")
-        val k = es(3).eval(null) match {
-          case i: java.lang.Integer => i.intValue()
-          case l: java.lang.Long => l.intValue()
-          case other => throw new IllegalArgumentException(
-            s"bottomk_sample: k must be integral, got $other")
-        }
-        require(k > 0, s"bottomk_sample: k must be positive, got $k")
-        SampleSketch(es(0), es(1), es(2), k).toAggregateExpression()
-      },
-      "built-in")
 }

@@ -243,7 +243,6 @@ object Advanced {
     */
   def annRange(spark: SparkSession, dir: String,
       threshold: Double = 0.3): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val c = Tables.spread(spark, dir, "embeddings")
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     c.join(broadcast(Similarity.evalQueries(spark, dir)),
@@ -282,7 +281,6 @@ object Advanced {
     */
   def decontaminateMinhash(spark: SparkSession, dir: String,
       numHashes: Int = 16, bandRows: Int = 2): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val docs = Tables.spread(spark, dir, "documents")
     // persisted + materialized: grams run once across candidates and
     // both attaches, and the attach gates read ACTUAL cached bytes

@@ -237,7 +237,6 @@ object Analytics {
     */
   def textCmsFreq(spark: SparkSession, dir: String,
       w: Int = 256, d: Int = 4, topK: Int = 20): DataFrame = {
-    graft.functions.CountMin.register(spark)
     val toks = Tables.spread(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("tok"))
     val cms = toks.agg(expr(s"cms_agg(tok, $w, $d)").as("cms"))

@@ -105,7 +105,6 @@ object Corpus {
     * broadcasts — the corpus is touched once, map-side, no self-join.
     */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     def grams(df: DataFrame, idAs: String): DataFrame = df
       .select(col("doc_id").as(idAs), explode(
         expr("ngram_md5_hashes(split(text, ' '), 5)")).as("gh"))
@@ -149,8 +148,6 @@ object Corpus {
     */
   def decontaminateBloom(spark: SparkSession, dir: String,
       mBits: Int = 1 << 20, kProbes: Int = 4): DataFrame = {
-    graft.functions.Hashes.register(spark)
-    graft.functions.BloomSketch.register(spark)
     val docs = Tables.spread(spark, dir, "documents")
       .withColumn("ghs", expr("ngram_md5_hashes(split(text, ' '), 5)"))
     val bench = docs.where(col("source") === "src0")
@@ -183,7 +180,6 @@ object Corpus {
     */
   def dedupIncremental(spark: SparkSession, dir: String,
       mBits: Int = 1 << 20, kProbes: Int = 4): DataFrame = {
-    graft.functions.BloomSketch.register(spark)
     // 60-bit md5-derived content key (15 hex chars — fits BIGINT on
     // both engines; the verify join makes collisions harmless)
     val h = conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long")

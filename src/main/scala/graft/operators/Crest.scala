@@ -50,7 +50,6 @@ object Crest {
     * value. The exact column here is the eval harness, not the plan.
     */
   def aggHllDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HllSketch.register(spark)
     val sh = Tables.spread(spark, dir, "documents")
       .select(col("source"), split(col("text"), " ").as("toks"))
       .where(size(col("toks")) >= 3)
@@ -445,69 +444,6 @@ object Crest {
           (sqrt(dx.cast("double")) * sqrt(dy.cast("double")))))
         .as("spearman_rho"))
       .orderBy("l_returnflag")
-  }
-
-  /** The r12 join-back shape, kept ONLY as an AuxBench A/B side (not
-    * registered): both rank maps joined back onto lineitem, moments
-    * aggregated over the joined rows in DECIMAL(38,0).
-    */
-  private[graft] def aggSpearmanJoinback(spark: SparkSession,
-      dir: String): DataFrame = {
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_quantity").as("x"),
-        col("l_extendedprice").as("y"))
-    def rankMap(c: String, out: String): DataFrame =
-      li.groupBy(col("l_returnflag"), col(c))
-        .agg(count(lit(1)).as("t"))
-        .withColumn("cum", sum("t").over(
-          Window.partitionBy("l_returnflag").orderBy(c)))
-        .select(col("l_returnflag"), col(c),
-          (col("cum") * 2L - col("t") + 1L).as(out))
-    val ranked = li
-      .join(rankMap("x", "rx"), Seq("l_returnflag", "x"))
-      .join(rankMap("y", "ry"), Seq("l_returnflag", "y"))
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val agg = ranked.groupBy("l_returnflag")
-      .agg(count(lit(1)).cast(dec).as("n"),
-        sum(col("rx").cast(dec)).as("sx"),
-        sum(col("ry").cast(dec)).as("sy"),
-        sum((col("rx") * col("rx")).cast(dec)).as("sxx"),
-        sum((col("ry") * col("ry")).cast(dec)).as("syy"),
-        sum((col("rx") * col("ry")).cast(dec)).as("sxy"))
-    val dx = col("n") * col("sxx") - col("sx") * col("sx")
-    val dy = col("n") * col("syy") - col("sy") * col("sy")
-    agg.select(col("l_returnflag"), col("n").cast("long").as("n_rows"),
-      when(dx > 0 && dy > 0,
-        r4((col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          (sqrt(dx.cast("double")) * sqrt(dy.cast("double")))))
-        .as("spearman_rho"))
-      .orderBy("l_returnflag")
-  }
-
-  /** AuxBench piece probe: the (flag, y) value-level partial aggregate
-    * + rank window subtree of the r13 [[aggSpearman]] (the candidate
-    * serial bottleneck — a 3-partition window over ~distinct-price
-    * rows). Not registered.
-    */
-  private[graft] def aggSpearmanYmap(spark: SparkSession,
-      dir: String): DataFrame = {
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_quantity").as("x"),
-        col("l_extendedprice").as("y"))
-    val xm = li.groupBy(col("l_returnflag"), col("x"))
-      .agg(count(lit(1)).as("t"))
-      .withColumn("cum", sum("t").over(
-        Window.partitionBy("l_returnflag").orderBy("x")))
-      .select(col("l_returnflag"), col("x"), col("t"),
-        (col("cum") * 2L - col("t") + 1L).as("rx"))
-    li.join(Tables.maybeBroadcast(
-        xm.select(col("l_returnflag"), col("x"), col("rx"))),
-        Seq("l_returnflag", "x"))
-      .groupBy(col("l_returnflag"), col("y"))
-      .agg(count(lit(1)).as("t"), sum(col("rx")).as("srx"))
-      .withColumn("cum", sum("t").over(
-        Window.partitionBy("l_returnflag").orderBy("y")))
-      .withColumn("ry", col("cum") * 2L - col("t") + 1L)
   }
 
   val aggSpearmanSql: String =

@@ -264,7 +264,6 @@ object Curation {
 
   def annIvfPq(spark: SparkSession, dir: String, k: Int, nprobe: Int,
       m: Int, ksub: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     require(64 % m == 0, s"m must divide 64, got $m")
     val subLen = 64 / m
     val v = Tables.spread(spark, dir, "embeddings")
@@ -636,7 +635,6 @@ object Curation {
     * corpus shuffle. The label filter rides the scan.
     */
   def annHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     val q = v.where(col("vec_id") % 50 === 0 && col("vec_id") < 1000000L)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -732,7 +730,6 @@ object Curation {
     * (q_id, c_id) result sets.
     */
   def annRecallAtK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     val q = Similarity.evalQueries(spark, dir)
     val truth = Similarity.annBruteforceFrom(v, q, k = 3)

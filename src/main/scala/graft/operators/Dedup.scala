@@ -91,7 +91,6 @@ object Dedup {
     * gram strings never materialize.
     */
   private def shingled(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     Tables.spread(spark, dir, "documents")
       .withColumn("hsh", expr("ngram_hashes(split(text, ' '), 3)"))
       .select("doc_id", "hsh")
@@ -167,7 +166,6 @@ object Dedup {
 
   def dedupMinhashLsh(spark: SparkSession, dir: String, numHashes: Int,
       bandRows: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     // hashed shingle sets: one pass per doc, reused by both the
     // signature and the exact-Jaccard verify
     minhashPairsOn(shingled(spark, dir), numHashes, bandRows)
@@ -221,7 +219,6 @@ object Dedup {
     require(64 % bands == 0, s"bands must divide 64, got $bands")
     require(bands > maxHamming,
       s"pigeonhole cover needs bands > maxHamming ($bands <= $maxHamming)")
-    graft.functions.Hashes.register(spark)
     val bits = 64 / bands
     val mask = if (bits == 64) -1L else (1L << bits) - 1
     val base = Tables.spread(spark, dir, "documents")
@@ -263,7 +260,6 @@ object Dedup {
 
   def dedupNgramJaccard(spark: SparkSession, dir: String, numHashes: Int,
       bandRows: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     // persisted + MATERIALIZED (count) so (a) the gram compute runs
     // once across candidates + both attaches and (b) the attach gates
     // below read the ACTUAL cached bytes — Catalyst's default-width
@@ -353,7 +349,6 @@ object Dedup {
 
   def dedupEmbedding(spark: SparkSession, dir: String, bands: Int,
       bits: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
       .withColumn("sig", expr(s"md5_rhp_bucket(embedding, ${bands * bits})"))
       .select("vec_id", "embedding", "sig")
@@ -460,7 +455,6 @@ object Dedup {
 
   def dedupContainment(spark: SparkSession, dir: String, passageTokens: Int,
       maxDf: Int, threshold: Double): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val docs = Tables.spread(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
       .withColumn("grams", expr("ngram_hashes(toks, 2)"))
@@ -554,7 +548,6 @@ object Dedup {
 
   def dedupLevenshtein(spark: SparkSession, dir: String, numHashes: Int,
       bandRows: Int, threshold: Double): DataFrame = {
-    graft.functions.Hashes.register(spark)
     // persisted + materialized: the gram compute is shared between
     // candidates and attaches, and the text-attach gates below read
     // ACTUAL cached bytes — default-width stats count a full document
@@ -664,7 +657,6 @@ object Dedup {
     * bound; the τ dial trades it explicitly.
     */
   def dedupAllpairsExact(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     // shingle sets: lower + non-alnum split (the #27 normalization),
     // distinct word 3-grams, carried ONLY as ngram_hashes — a
     // collision-free (w.h.p.) injection of the gram set, so set

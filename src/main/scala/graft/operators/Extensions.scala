@@ -749,8 +749,6 @@ object Extensions {
     * make the estimate oracle-reproducible to the bit.
     */
   def aggKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
-    graft.functions.KmvSketch.register(spark)
     val g = Tables.spread(spark, dir, "documents")
       .withColumn("hs", expr("ngram_md5_hashes(split(text, ' '), 3)"))
       .select("source", "doc_id", "hs")

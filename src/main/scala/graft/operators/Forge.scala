@@ -41,7 +41,6 @@ object Forge {
     * mergeable, not replayable, not oracle-checkable).
     */
   def sampleBottomk(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SampleSketch.register(spark)
     val e = Tables.eventsUs(spark, dir)
       .select(col("event_type"), col("event_id"),
         expr(centsExpr).as("c"))
@@ -632,8 +631,6 @@ object Forge {
     * 60-bit md5 hash, which the oracle re-derives by ORDER BY/OFFSET.
     */
   def qualityProfile(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.KmvSketch.register(spark)
-    graft.functions.Hashes.register(spark)
     val docs = Tables(spark, dir, "documents")
     // the full-64-bit md5 hash (ngram_md5_hashes at n=1 over a
     // singleton array) — KMV's (k−1)/(h_k/2^64) estimator needs the

@@ -94,31 +94,16 @@ object Graph {
     spark.read.parquet(path)
   }
 
-  private def undirected(spark: SparkSession, dir: String,
-      minSupport: Long): DataFrame = {
-    // a distinct-first variant (dedup (o, p) before the self-join,
-    // plain count after) was A/B'd round-18 and REJECTED: same-box
-    // interleaved runs are a wash at sf0.1 (6.18 vs 6.15 s pagerank)
-    // and slightly WORSE at 10× (31.7 vs 30.0 s) — the countDistinct
-    // expand is cheaper than the extra pre-join shuffle here because
-    // (o, p) duplicates are rare in this data; both forms stay in
-    // AuxBench (graph_pagerank_{distinctedges,joinedges})
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-    li.as("a").join(li.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
-      .agg(countDistinct(col("a.o")).as("sup"))
-      .where(col("sup") >= minSupport)
-      .select("pa", "pb")
-  }
-
-  /** A/B variant of [[undirected]]: ONE shuffle groups lineitem into
-    * per-order part SETS, pairs explode MAP-SIDE from each array
-    * (bounded by (lines/order)², same as the join's fan-out), and the
-    * support count is a plain partial-aggregable `count` — the set
-    * already dedups (order, pa, pb), so no countDistinct expand and no
-    * self-join. Same output contract as [[undirected]].
+  /** The derivation behind [[undirected]]'s cache: ONE shuffle groups
+    * lineitem into per-order part SETS, pairs explode MAP-SIDE from each
+    * array (bounded by (lines/order)², same as a self-join's fan-out),
+    * and the support count is a plain partial-aggregable `count` — the
+    * set already dedups (order, pa, pb), so no countDistinct expand and
+    * no self-join. The self-join forms it replaced (join +
+    * countDistinct, distinct-first join + count) are settled A/Bs — see
+    * `cachedEdges`, numbers in PLANS.md and OPTIMIZATION_r13.md;
+    * GraphSpec keeps the distinct-first form as its row-identity
+    * reference.
     */
   private[graft] def undirectedViaSets(spark: SparkSession, dir: String,
       minSupport: Long = 2): DataFrame = {
@@ -145,59 +130,6 @@ object Graph {
       .groupBy("pa", "pb").agg(count(lit(1)).as("sup"))
       .where(col("sup") >= minSupport)
       .select("pa", "pb", "sup")
-  }
-
-  /** A/B variant of [[undirected]]: dedup (order, part) FIRST, then
-    * self-join and plain COUNT — trades the post-join countDistinct
-    * expand for one extra pre-join shuffle; the join inputs shrink by
-    * the duplicate-line factor and the pair count becomes map-side
-    * combinable. AuxBench measures it against the registered plan.
-    */
-  private[graft] def undirectedViaDistinct(spark: SparkSession,
-      dir: String, minSupport: Long = 2): DataFrame = {
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .distinct()
-    li.as("a").join(li.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
-      .agg(count(lit(1)).as("sup"))
-      .where(col("sup") >= minSupport)
-      .select("pa", "pb")
-  }
-
-  /** A/B harness form of #99 over the distinct-first edge list. */
-  def graphPagerankViaDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val u = undirectedViaDistinct(spark, dir)
-    pagerankFrom(
-      u.select(col("pa").as("src"), col("pb").as("dst"))
-        .union(u.select(col("pb").as("src"), col("pa").as("dst"))),
-      iters = 3)
-  }
-
-  /** A/B variant: the pre-round-18 derivation (raw self-join +
-    * countDistinct support) — kept in AuxBench as the measured record
-    * behind the distinct-first swap.
-    */
-  private[operators] def undirectedViaJoin(spark: SparkSession,
-      dir: String, minSupport: Long = 2): DataFrame = {
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-    li.as("a").join(li.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
-      .agg(countDistinct(col("a.o")).as("sup"))
-      .where(col("sup") >= minSupport)
-      .select("pa", "pb")
-  }
-
-  /** A/B harness form of #99 over the join+countDistinct edge list. */
-  def graphPagerankViaJoin(spark: SparkSession, dir: String): DataFrame = {
-    val u = undirectedViaJoin(spark, dir)
-    pagerankFrom(
-      u.select(col("pa").as("src"), col("pb").as("dst"))
-        .union(u.select(col("pb").as("src"), col("pa").as("dst"))),
-      iters = 3)
   }
 
   /** Both directions of [[undirected]]: one row per (src, dst) arc. */
@@ -232,17 +164,6 @@ object Graph {
 
   def graphPagerank(spark: SparkSession, dir: String, iters: Int): DataFrame =
     pagerankFrom(symmetric(spark, dir), iters)
-
-  /** A/B harness form of #99 over the set-derived edge list —
-    * AuxBench measures it against the registered join-derived plan.
-    */
-  def graphPagerankViaSets(spark: SparkSession, dir: String): DataFrame = {
-    val u = undirectedViaSets(spark, dir)
-    pagerankFrom(
-      u.select(col("pa").as("src"), col("pb").as("dst"))
-        .union(u.select(col("pb").as("src"), col("pa").as("dst"))),
-      iters = 3)
-  }
 
   /** PageRank over an arbitrary directed edge list (`src`, `dst`). */
   def pagerankFrom(e: DataFrame, iters: Int): DataFrame = {

@@ -1091,7 +1091,6 @@ object Horizon {
     * everything after operates on |queries| × 10 rows.
     */
   def annMmr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val emb = Tables(spark, dir, "embeddings")
     annMmrFrom(
       emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb")),

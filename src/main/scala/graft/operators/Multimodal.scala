@@ -434,7 +434,6 @@ object Multimodal {
     require(64 % bands == 0 && bands > maxHamming)
     val bits = 64 / bands
     val mask = if (bits == 64) -1L else (1L << bits) - 1
-    graft.functions.Hashes.register(spark)
     val docs = graft.Tables.spread(spark, dir, "documents")
       .select("doc_id", "text")
     // planted ids at +10^12 — disjoint from organic doc_ids by

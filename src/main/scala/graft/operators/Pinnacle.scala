@@ -197,7 +197,6 @@ object Pinnacle {
     * makes the label filter a partition-pruned scan.
     */
   def annFiltered(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     val q = v.where(col("vec_id") % 50 === 0 && col("vec_id") < 1000000L)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -253,7 +252,6 @@ object Pinnacle {
     * whole point of the shape at 100 TB.
     */
   def annRerank(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val emb = Tables.spread(spark, dir, "embeddings")
     val maxabs = emb.agg(max(expr(
       """aggregate(embedding, CAST(0.0 AS DOUBLE),
@@ -945,7 +943,6 @@ object Pinnacle {
     * map-side, only histograms cross the shuffle, reads are O(buckets).
     */
   def aggQdigest(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.QuantileSketch.register(spark)
     val e = Tables.eventsUs(spark, dir)
       .select(col("event_type"),
         expr("cast(floor(value * 100.0 + 0.5) as bigint)").as("v"))

@@ -50,7 +50,6 @@ object Similarity {
     * rank filter.
     */
   def annBruteforce(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     annBruteforceFrom(v, evalQueries(spark, dir), k = 5)
   }
@@ -98,7 +97,6 @@ object Similarity {
     * (sum over dims of ±embedding[d]) > 0, reproducible by the oracle.
     */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     annLshFrom(v, evalQueries(spark, dir), k = 3)
   }
@@ -134,7 +132,6 @@ object Similarity {
     * explode creates no duplicate pairs.
     */
   def annMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     annMultiprobeFrom(v, evalQueries(spark, dir), k = 3, bits = 8)
   }
@@ -227,7 +224,6 @@ object Similarity {
 
   def annKnnGraph(spark: SparkSession, dir: String, bits: Int,
       k: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         expr(s"md5_rhp_bucket(embedding, $bits)").as("bucket"))
@@ -295,7 +291,6 @@ object Similarity {
     * sqrt/divide on each side.
     */
   def annSq8(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val emb = Tables.spread(spark, dir, "embeddings")
     val maxabs = emb.agg(max(expr(
       """aggregate(embedding, CAST(0.0 AS DOUBLE),
@@ -536,7 +531,6 @@ object Similarity {
     sampleCoreset(spark, dir, k = 8)
 
   def sampleCoreset(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val outSchema = new org.apache.spark.sql.types.StructType()
       .add("sel_order", "long", nullable = false)
       .add("vec_id", "long", nullable = true)
@@ -676,7 +670,6 @@ object Similarity {
     * — this operator is the recall evidence for that substitution.
     */
   def embedJlProject(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val (dims, kd, k) = (64, 16, 3)
     val signs: Seq[Seq[Double]] = (0 until kd).map { j =>
       (0 until dims).map { d =>
@@ -833,7 +826,6 @@ object Similarity {
     * equi-join on cell id — the corpus never cross-joins the query set.
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     annIvfFrom(v, evalQueries(spark, dir), k = 3, nprobe = 2,
       Some(ivfCentroidsFullCached(spark, dir)))
@@ -1016,7 +1008,6 @@ object Similarity {
   }
 
   def annIvfIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     val initial = v.where(col("vec_id") % 4 =!= 3)
     val frozen = ivfCentroids(initial)
@@ -1155,7 +1146,6 @@ object Similarity {
     * building the index once; nothing row-to-row joins the corpus.
     */
   def annIvfRecluster(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     val initial = v.where(col("vec_id") % 4 =!= 3)
     val assigned = ivfAssignedCached(spark, dir)
@@ -1495,7 +1485,6 @@ object Similarity {
 
   def annPq(spark: SparkSession, dir: String, k: Int, m: Int,
       ksub: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val (cent, coded) = pqModel(spark, dir, m, ksub)

@@ -460,7 +460,6 @@ object Summit {
 
   def annGraphSearch(spark: SparkSession, dir: String, bits: Int,
       kGraph: Int, beam: Int, hops: Int, k: Int): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.persistSlot("summit.graphSearch.v",
       Tables.spread(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"),
@@ -1281,7 +1280,6 @@ object Summit {
     * the cosine is the only per-pair compute.
     */
   def embedTextConflict(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     // the eval corpus plants the positive class (the #140 convention —
     // the organic corpus has no byte-identical dups): every 7th doc
     // re-uploads under a fresh id; HALF the re-uploads (every 14th)
@@ -1513,7 +1511,6 @@ object Summit {
     * WindowGroupLimit shape of #32.
     */
   def annBinaryHamming(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val sigExpr =
       """aggregate(sequence(0, 63), 0L, (acc, i) ->
         |  acc + if(element_at(embedding, i + 1) > 0.0F,
@@ -1575,7 +1572,6 @@ object Summit {
     * horizon-bounded as always.
     */
   def embedMatryoshkaEval(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val q = Similarity.evalQueries(spark, dir)

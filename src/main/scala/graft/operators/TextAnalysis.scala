@@ -286,7 +286,6 @@ object TextAnalysis {
     textHeavyHitters(spark, dir, k = 32)
 
   def textHeavyHitters(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    graft.functions.MisraGries.register(spark)
     val toks = Tables.spread(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("tok"))
     val cand = toks.agg(expr(s"mg_topk(tok, $k)").as("cands"))

@@ -552,7 +552,6 @@ object Zenith {
     * tiny (q_id, c_id) result sets.
     */
   def annProbeDial(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, dir, "embeddings")
     val q = Similarity.evalQueries(spark, dir)
     val truth = Similarity.annBruteforceFrom(v, q, k = 3)

@@ -637,7 +637,6 @@ object EventStream {
     require(numHashes % bandRows == 0,
       s"bandRows must divide numHashes ($bandRows / $numHashes)")
     val sp = docs.sparkSession
-    graft.functions.Hashes.register(sp)
     import sp.implicits._
     docs.toDF()
       .withColumn("sig", expr(
@@ -772,7 +771,6 @@ object EventStream {
     require(numHashes % bandRows == 0,
       s"bandRows must divide numHashes ($bandRows / $numHashes)")
     val sp = docs.sparkSession
-    graft.functions.Hashes.register(sp)
     import sp.implicits._
     import org.apache.spark.sql.streaming.TimeMode
     docs.toDF()
@@ -823,7 +821,6 @@ object EventStream {
   def allpairsCandidatesStream(docs: Dataset[Doc],
       dfOrder: Map[Long, Long]): Dataset[CandPair] = {
     val sp = docs.sparkSession
-    graft.functions.Hashes.register(sp)
     import sp.implicits._
     val bc = sp.sparkContext.broadcast(dfOrder)
     docs.toDF()

@@ -152,7 +152,6 @@ class AnalyticsSpec extends GraftSpec {
   test("cms: never undercounts, and is exact when w >> distinct keys") {
     val sp = spark
     import sp.implicits._
-    graft.functions.CountMin.register(sp)
     val rows = operators.Analytics.textCmsFreq(spark, sf).collect()
     assert(rows.length == 20)
     rows.foreach { r =>

@@ -17,7 +17,6 @@ class BloomSketchSpec extends GraftSpec {
   test("bloom: every inserted hash probes positive (no false negatives)") {
     val sp = spark
     import sp.implicits._
-    BloomSketch.register(sp)
     // adversarial-ish values: dense small ints, sign boundary, extremes
     val hashes = (1L to 500L) ++ Seq(0L, -1L, Long.MinValue, Long.MaxValue)
     val df = hashes.map(h => Seq(h)).toDF("hs")
@@ -31,7 +30,6 @@ class BloomSketchSpec extends GraftSpec {
   test("bloom: partial OR-merge equals single-partition build") {
     val sp = spark
     import sp.implicits._
-    BloomSketch.register(sp)
     val df = (1L to 2000L).map(h => Seq(h * 0x9E3779B97F4A7C15L)).toDF("hs")
     val one = df.coalesce(1)
       .agg(expr(s"bloom_agg(hs, $M, $K)")).collect()
@@ -45,7 +43,6 @@ class BloomSketchSpec extends GraftSpec {
   test("bloom: absent keys mostly reject (the filter actually filters)") {
     val sp = spark
     import sp.implicits._
-    BloomSketch.register(sp)
     val m = 1 << 16 // sized ~8 bits/element for the 2k inserted keys
     val df = (1L to 2000L).map(h => Seq(h)).toDF("hs")
     val bloom = df.agg(expr(s"bloom_agg(hs, $m, $K)").as("bloom"))

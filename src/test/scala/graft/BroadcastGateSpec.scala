@@ -85,7 +85,9 @@ class BroadcastGateSpec extends AnyFunSuite {
   }
 
   test("maybeBroadcast hints iff the size estimate clears the gate") {
-    val tiny = Tables(spark, sf, "region")
+    // a tiny NON-dimension table: the session's BroadcastDimTables rule
+    // hints region/nation scans on its own, which would mask this gate
+    val tiny = Tables(spark, sf, "supplier")
     assert(Tables.maybeBroadcast(tiny).queryExecution.analyzed
       .isInstanceOf[ResolvedHint], "tiny table not hinted")
     withConf("spark.graft.attachBroadcastMaxBytes" -> "0") {

@@ -10,10 +10,7 @@ import org.apache.spark.sql.Row
   */
 class FunctionsSpec extends GraftSpec {
 
-  private def sql1(q: String): Row = {
-    graft.functions.Hashes.register(spark)
-    spark.sql(q).head
-  }
+  private def sql1(q: String): Row = spark.sql(q).head
 
   test("intersect_count matches Set intersection on sorted arrays") {
     val a = Seq(1L, 5L, 9L, 12L, 40L, 77L)
@@ -96,7 +93,6 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("null inputs propagate as null, not as crashes") {
-    graft.functions.Hashes.register(spark)
     val r = spark.sql(
       """SELECT
         |  cosine_f32(CAST(NULL AS ARRAY<FLOAT>), array(1.0F)) AS c,
@@ -108,7 +104,6 @@ class FunctionsSpec extends GraftSpec {
   }
 
   test("kmv estimate is within 15% at 20x the sketch size") {
-    graft.functions.KmvSketch.register(spark)
     // 5120 distinct hashed values vs k=256: estimator regime, ±1/sqrt(k)
     // ≈ 6.25% expected; 15% is a 2.4-sigma bound
     val est = spark.sql(

@@ -4,26 +4,72 @@ import org.apache.spark.sql.SparkSession
 
 /** The extensions-config path a cluster deploy uses: a FRESH session
   * built with spark.sql.extensions=graft.GraftExtensions resolves every
-  * graft function in plain SQL with no runtime register() call.
+  * graft function in plain SQL and carries graft's catalyst rules.
   */
 class GraftExtensionsSpec extends GraftSpec {
 
-  test("spark.sql.extensions injects all graft functions") {
-    // `spark.sql.extensions` is static config read from the
-    // SparkContext, which the shared test context was built without —
-    // use the builder's programmatic withExtensions (the same class a
-    // cluster names in --conf) on a fresh session over the same context
+  /** Every name `GraftExtensions` binds — the whole function table. */
+  private val tableNames = Seq(
+    "simhash64", "simhash_md5", "simhash_from_hashes", "minhash_sig",
+    "minhash_sig_from_hashes", "ngram_hashes", "ngram_md5_hashes",
+    "hash_array", "intersect_count", "cosine_f32", "rhp_bucket",
+    "md5_rhp_bucket", "phash64", "kmv_distinct", "mg_topk", "bloom_agg",
+    "bloom_any", "cms_agg", "cms_est", "hll_agg", "hll_regs",
+    "qdigest_quantile", "bottomk_sample")
+
+  /** A FRESH session over the shared context: `spark.sql.extensions` is
+    * static config read from the SparkContext, so the extended variant
+    * uses the builder's programmatic withExtensions (the same class a
+    * cluster names in --conf) and the bare one uses neither. The shared
+    * TestSpark session is restored afterwards for the other suites.
+    */
+  private def withFreshSession[A](extended: Boolean)(
+      f: SparkSession => A): A = {
     val shared = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[2]")
       .appName("graft-ext-test")
-      .withExtensions(new GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    val s2 = (if (extended) b.withExtensions(new GraftExtensions()(_))
+      else b).getOrCreate()
+    try f(s2)
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  test("the table binds every graft function name on a fresh session " +
+      "and on the sessions derived from it") {
+    withFreshSession(extended = true) { s2 =>
+      Seq(s2, s2.newSession()).foreach { s =>
+        val missing = tableNames.filterNot(n =>
+          s.sessionState.functionRegistry.functionExists(
+            org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+        assert(missing.isEmpty, s"unbound: ${missing.mkString(", ")}")
+      }
+    }
+  }
+
+  test("qdigest_quantile keeps the checked builder: integral q, arity") {
+    withFreshSession(extended = true) { s2 =>
+      val max = s2.sql(
+        """SELECT qdigest_quantile(v, 1) AS p100 FROM
+          |  (SELECT explode(sequence(1L, 10L)) AS v)""".stripMargin).head
+      assert(max.getAs[Long]("p100") == 10L) // exact below 16
+      val e = intercept[Exception](s2.sql(
+        """SELECT qdigest_quantile(v) FROM
+          |  (SELECT explode(sequence(1L, 10L)) AS v)""".stripMargin)
+        .collect())
+      assert(e.getMessage.contains("takes 2 arguments"), e.getMessage)
+    }
+  }
+
+  test("spark.sql.extensions injects all graft functions") {
+    withFreshSession(extended = true) { s2 =>
       val row = s2.sql(
         """SELECT
           |  simhash64(array('a b', 'b c')) AS sh,
@@ -92,39 +138,22 @@ class GraftExtensionsSpec extends GraftSpec {
         s2.conf.set("spark.graft.dimBroadcastMaxBytes",
           (256L * 1024 * 1024).toString)
       }
-      // and the un-extended shared session must NOT broadcast under the
-      // same threshold (proves the rule, not statistics, did it)
-      val prevShared = shared.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      shared.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val plainPlan = Tables(shared, sf, "customer")
-          .join(Tables(shared, sf, "nation"),
-            org.apache.spark.sql.functions.col("c_nationkey") ===
-              org.apache.spark.sql.functions.col("n_nationkey"))
-          .queryExecution.executedPlan.toString
-        assert(!plainPlan.contains("BroadcastHashJoin"))
-      } finally {
-        shared.conf.set("spark.sql.autoBroadcastJoinThreshold", prevShared)
-      }
-    } finally {
-      // the shared TestSpark session must stay usable for other suites
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
+    }
+    // and a bare session over the same context must NOT broadcast under
+    // the same threshold (proves the rule, not statistics, did it)
+    withFreshSession(extended = false) { bare =>
+      bare.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val plainPlan = Tables(bare, sf, "customer")
+        .join(Tables(bare, sf, "nation"),
+          org.apache.spark.sql.functions.col("c_nationkey") ===
+            org.apache.spark.sql.functions.col("n_nationkey"))
+        .queryExecution.executedPlan.toString
+      assert(!plainPlan.contains("BroadcastHashJoin"))
     }
   }
 
   test("approxCountDistinct flag rewrites COUNT(DISTINCT) to the KMV sketch") {
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-approx-test")
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    withFreshSession(extended = true) { s2 =>
       val q = "SELECT source, COUNT(DISTINCT lang) AS n FROM documents GROUP BY source"
       Tables(s2, sf, "documents").createOrReplaceTempView("documents")
       // flag off: untouched exact plan, no sketch
@@ -148,10 +177,6 @@ class GraftExtensionsSpec extends GraftSpec {
       val multi = s2.sql(
         "SELECT COUNT(DISTINCT source, lang) AS n FROM documents")
       assert(!multi.queryExecution.optimizedPlan.toString.contains("kmv"))
-    } finally {
-      s2.conf.set("spark.graft.approxCountDistinct", "false")
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
     }
   }
 }

@@ -4,15 +4,19 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — the
-  * suite forks a single JVM, so getOrCreate dedupes).
+  * suite forks a single JVM, so getOrCreate dedupes). Built like
+  * `GraftSession`: with `GraftExtensions` and the nanos-as-long parquet
+  * read, so specs see the same functions and rules a deploy does.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .withExtensions(new GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -16,7 +16,6 @@ class HllSketchSpec extends GraftSpec {
       "harmonic denominator S, equal to the Scala reference") {
     val sp = spark
     import sp.implicits._
-    HllSketch.register(spark)
     val vals = distinctVals(2000)
     // duplicate every 3rd value — idempotence under repeats is part of
     // the MAX-register algebra
@@ -38,7 +37,6 @@ class HllSketchSpec extends GraftSpec {
       "(4.6% standard error at m=512)") {
     val sp = spark
     import sp.implicits._
-    HllSketch.register(spark)
     val n = 5000
     val s = distinctVals(n).toDF("v").agg(expr("hll_agg(v)"))
       .head().getDecimal(0)
@@ -77,7 +75,6 @@ class HllSketchSpec extends GraftSpec {
   test("null inputs are skipped; an empty group evaluates to null") {
     val sp = spark
     import sp.implicits._
-    HllSketch.register(spark)
     val withNulls = Seq(Some("a"), None, Some("b"), None, Some("a"))
       .toDF("v")
     val s = withNulls.agg(expr("hll_agg(v)")).head().getDecimal(0)

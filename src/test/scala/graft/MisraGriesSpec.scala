@@ -17,7 +17,6 @@ class MisraGriesSpec extends AnyFunSuite {
   private def skewed() = {
     val sp = spark
     import sp.implicits._
-    graft.functions.MisraGries.register(sp)
     val items = Seq.fill(100)("a") ++ Seq.fill(80)("b") ++
       (0 until 60).map(i => s"c$i")
     // shuffle deterministically so the heavy items aren't contiguous,
@@ -74,7 +73,6 @@ class MisraGriesSpec extends AnyFunSuite {
   test("uniform data yields no false guarantees after verify") {
     val sp = spark
     import sp.implicits._
-    graft.functions.MisraGries.register(sp)
     // 40 items × 6 each: nobody exceeds N/k for k=4 (60 < 240... N/k=60,
     // max freq 6) — the sketch may hold arbitrary survivors, the exact
     // filter must drop them all

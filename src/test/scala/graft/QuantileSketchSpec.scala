@@ -35,7 +35,6 @@ class QuantileSketchSpec extends GraftSpec {
       "estimate (pure function of the multiset)") {
     val sp = spark
     import sp.implicits._
-    QuantileSketch.register(spark)
     val vals = (1L to 5000L).map(i => (i * i * 2654435761L) % 100000L)
     def estimate(parts: Int): Seq[Long] = {
       val df = vals.toDF("v").repartition(parts)
@@ -71,7 +70,6 @@ class QuantileSketchSpec extends GraftSpec {
   test("nulls skip, empty input evaluates to null, negatives reject") {
     val sp = spark
     import sp.implicits._
-    QuantileSketch.register(spark)
     val withNulls = Seq[Option[Long]](Some(5L), None, Some(7L), None)
       .toDF("v")
     assert(withNulls.agg(expr("qdigest_quantile(v, 0.5)"))

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 class SimilaritySpec extends GraftSpec {
 
   test("ann_knn_graph: edges are bucket-coresident, ranked, symmetricable") {
-    graft.functions.Hashes.register(spark)
     val g = operators.Similarity.annKnnGraph(spark, sf)
     val edges = g.collect()
     assert(edges.nonEmpty, "knn graph is empty at test scale")
@@ -86,7 +85,6 @@ class SimilaritySpec extends GraftSpec {
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.col
-    graft.functions.Hashes.register(spark)
     // two clean cells along e1/e2; wave ids are ≡3 (mod 4) so the
     // operator's split picks them up. Cell 0's arrivals are native
     // and near its centroid; cell 1's arrivals are mislabeled 0 but
@@ -127,7 +125,6 @@ class SimilaritySpec extends GraftSpec {
   test("incremental IVF recall drift vs a fresh rebuild, measured " +
       "against brute-force truth") {
     import org.apache.spark.sql.functions.col
-    graft.functions.Hashes.register(spark)
     val v = Tables.spread(spark, sf, "embeddings")
       .select("vec_id", "label", "embedding")
     val q = operators.Similarity.evalQueries(spark, sf)
@@ -159,7 +156,6 @@ class SimilaritySpec extends GraftSpec {
       "flow accounting balances, and the step is near-converged") {
     val sp = spark
     import sp.implicits._
-    graft.functions.Hashes.register(spark)
     // initial state holds two BORDER members in cell 0 by their given
     // label (init labels are declared, not argmin'd — exactly how a
     // stale index holds stale placements); the e1-pure wave drags

@@ -214,7 +214,6 @@ class StreamingSpec extends GraftSpec {
     val streamed = spark.table("neardup_out")
       .select("id_a", "id_b").distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.functions.Hashes.register(spark)
     val grams = Tables(spark, sf, "documents")
       .withColumn("hsh", expr("ngram_hashes(split(text, ' '), 3)"))
       .select("doc_id", "hsh")
@@ -274,7 +273,6 @@ class StreamingSpec extends GraftSpec {
       }
     }
     // the batch contract over the SAME planted frame
-    graft.functions.Hashes.register(spark)
     val doc = Tables(spark, sf, "documents").select("doc_id", "text")
     val union = doc.unionByName(doc.where(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 5000000L).as("doc_id"), col("text")))
@@ -509,7 +507,6 @@ class StreamingSpec extends GraftSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.MisraGries.register(spark)
     val events = loadEvents()
     val k = 16
     // item stream with real cardinality (~|types| × 97) AND real skew:
@@ -994,7 +991,6 @@ class StreamingSpec extends GraftSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.HllSketch.register(spark)
     val events = loadEvents()
     val partDir = java.nio.file.Files
       .createTempDirectory("graft_hll_part").toString
@@ -1124,7 +1120,6 @@ class StreamingSpec extends GraftSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Hashes.register(spark)
     val v = Tables(spark, sf, "embeddings")
     val initial = v.where(col("vec_id") % 4 =!= 3)
     val newWave = v.where(col("vec_id") % 4 === 3)
@@ -1371,7 +1366,6 @@ class StreamingSpec extends GraftSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Hashes.register(spark)
     val docs = Tables(spark, sf, "documents")
       .select("doc_id", "lang", "source", "n_chars", "text")
       .collect()
@@ -1532,7 +1526,6 @@ class StreamingSpec extends GraftSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Hashes.register(spark)
     val grams = Tables(spark, sf, "documents")
       .withColumn("hs", expr(
         """ngram_hashes(filter(split(lower(text), '[^a-z0-9]+'),
