@@ -39,6 +39,11 @@ import org.apache.spark.sql.functions._
   *     bound comes from bucketing keys into ~rows/target shuffle
   *     groups, so a huge partition compacts with many parallel tasks,
   *     not one.
+  *   - Jobs per run: the touched-partition collect, the staging write,
+  *     one aggregate over the staged copy (surviving partitions and
+  *     the row count that sizes the buckets, together) and the
+  *     overwrite. An empty log touches nothing and stops after the
+  *     first; no separate emptiness probe runs before it.
   */
 object CatalogCompaction {
 
@@ -96,9 +101,9 @@ object CatalogCompaction {
       keyCol: String = "doc_id",
       partitionCol: String = "processing_level",
       targetRowsPerFile: Long = 1000000L): CompactStats = {
+    // no separate emptiness probe: an empty log touches no partition
+    // and returns below, before anything is written
     val logD = log.distinct()
-    if (logD.isEmpty) return CompactStats(Nil, Nil, 0L)
-
     val base = alignToLog(spark.read.parquet(basePath), logD)
     // partitions holding a changed key today (column-pruned scan: only
     // key + partition columns are read; a production catalog with
@@ -134,13 +139,16 @@ object CatalogCompaction {
       merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
       val staged = spark.read.parquet(staging.toString)
 
-      // a touched partition with no surviving rows is not present in
-      // the dynamic overwrite's output — remove its directory explicitly
-      val survivingParts = staged.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0).toString).toSet
+      // one aggregate gives both the surviving partitions and the row
+      // count that sizes the buckets. A touched partition with no
+      // surviving rows is not present in the dynamic overwrite's
+      // output — remove its directory explicitly
+      val perPart = staged.groupBy(col(partitionCol)).count().collect()
+      val survivingParts = perPart.map(_.get(0).toString).toSet
       val removed = touched.filterNot(survivingParts)
+      val rowsWritten = perPart.map(_.getLong(1)).sum
 
-      val rowsWritten = writeCompacted(staged, basePath, partitionCol,
+      writeCompacted(staged, basePath, partitionCol, rowsWritten,
         targetRowsPerFile)
 
       removed.foreach { v =>
@@ -156,10 +164,9 @@ object CatalogCompaction {
     * partition), `maxRecordsPerFile` is the hard per-file cap.
     */
   private def writeCompacted(staged: DataFrame, basePath: String,
-      partitionCol: String, targetRowsPerFile: Long): Long = {
-    // `staged` is a parquet read of the staging copy, so the count and
-    // the overwrite below re-read durable files — no cache pin needed
-    val rows = staged.count()
+      partitionCol: String, rows: Long, targetRowsPerFile: Long): Unit = {
+    // `staged` is a parquet read of the staging copy, so the overwrite
+    // below re-reads durable files — no cache pin needed
     val nBuckets = math.max(1L, (rows + targetRowsPerFile - 1) /
       targetRowsPerFile).toInt
     staged
@@ -174,6 +181,5 @@ object CatalogCompaction {
       .option("maxRecordsPerFile", targetRowsPerFile)
       .partitionBy(partitionCol)
       .parquet(basePath)
-    rows
   }
 }

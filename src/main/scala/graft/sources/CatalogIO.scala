@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -99,4 +100,23 @@ object CatalogIO {
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionCols: _*)
       .parquet(path)
+
+  /** Write one small driver-side file so that readers listing its
+    * directory see all of it or none of it: the bytes go to a hidden
+    * `.<name>.tmp` sibling (Spark's readers skip `.`/`_` names), which
+    * is then renamed over `dest`. The rename replaces an existing
+    * `dest` by delete-then-rename, because a Hadoop rename onto an
+    * existing file fails.
+    */
+  def writeAtomically(spark: SparkSession, dest: String,
+      bytes: Array[Byte]): Unit = {
+    val target = new Path(dest)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    fs.delete(target, false)
+    if (!fs.rename(tmp, target))
+      throw new IllegalStateException(s"rename $tmp -> $target failed")
+  }
 }

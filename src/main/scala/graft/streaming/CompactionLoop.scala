@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{CatalogCompaction, CatalogVacuum}
+import graft.sources.{CatalogCompaction, CatalogIO, CatalogVacuum}
 
 /** Streamed compaction trigger: the foreachBatch maintenance loop that
   * keeps a CDC-fed catalog read-optimized WHILE the stream runs.
@@ -27,12 +27,13 @@ import graft.sources.{CatalogCompaction, CatalogVacuum}
   * Layout under one `tableDir`: `base/` (partitioned parquet, the
   * compacted state), `log/` (append-only change parquet),
   * `_compacted_through` (the watermark marker, written atomically via
-  * tmp+rename).
+  * tmp+rename by `CatalogIO.writeAtomically`).
   *
-  * Scale: the trigger check is one column-pruned count of the pending
-  * slice (a production loop keeps the pending count in streaming
-  * state and skips even that); compaction cost is CatalogCompaction's
-  * touched-partitions-only rewrite.
+  * Scale: the trigger check is one aggregate query over the pending
+  * slice that returns its row count and its max `seq` (the watermark
+  * candidate) together (a production loop keeps the pending count in
+  * streaming state and skips even that); compaction cost is
+  * CatalogCompaction's touched-partitions-only rewrite.
   */
 object CompactionLoop {
 
@@ -52,17 +53,6 @@ object CompactionLoop {
       try scala.io.Source.fromInputStream(in).mkString.trim.toLong
       finally in.close()
     }
-  }
-
-  private def writeWatermark(spark: SparkSession, tableDir: String,
-      seq: Long): Unit = {
-    val f = fs(spark, tableDir)
-    val tmp = new Path(tableDir, marker + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(seq.toString.getBytes("UTF-8")) finally out.close()
-    f.delete(new Path(tableDir, marker), false)
-    if (!f.rename(tmp, new Path(tableDir, marker)))
-      throw new IllegalStateException("watermark rename failed")
   }
 
   /** Change records not yet folded into the base (replayed duplicates
@@ -94,11 +84,14 @@ object CompactionLoop {
     batch.write.mode("append").parquet(s"$tableDir/log")
     val pending = pendingLog(spark, tableDir)
     val pendingD = pending.distinct()
-    if (pendingD.count() < threshold) return false
-    val maxSeq = pendingD.agg(max("seq")).head().getLong(0)
+    // the trigger check and the watermark candidate in one query
+    val sizeAndMax = pendingD.agg(count(lit(1)), max("seq")).head()
+    if (sizeAndMax.getLong(0) < threshold) return false
+    val maxSeq = sizeAndMax.getLong(1)
     CatalogCompaction.compact(spark, s"$tableDir/base", pendingD,
       keyCol, partitionCol)
-    writeWatermark(spark, tableDir, maxSeq)
+    CatalogIO.writeAtomically(spark, s"$tableDir/$marker",
+      maxSeq.toString.getBytes("UTF-8"))
     true
   }
 

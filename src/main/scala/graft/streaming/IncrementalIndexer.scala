@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -71,7 +72,10 @@ object IncrementalIndexer {
     * transition is idempotent under its retried sends.
     */
   def jobStates(events: DataFrame): DataFrame =
+    // hash-partitioned by uuid once: both aggregates below group on
+    // keys that contain uuid, so neither needs a shuffle of its own
     events.where(col("name") === "indexed")
+      .repartition(col("uuid"))
       .groupBy(col("uuid"), col("batch_id"))
       .agg(max("n_files").as("n_files"))
       .groupBy(col("uuid"))
@@ -117,7 +121,17 @@ object IncrementalIndexer {
     * replay (the reference's `retryMaxAttempts=10` messaging is too);
     * the handshake carries `batch_id` so downstream folds can
     * deduplicate, and the catalog write is idempotent per batch via
-    * deterministic content.
+    * deterministic content. A micro-batch with no bad rows runs ONE
+    * Spark job, the catalog write: two observations ride it, one on
+    * the raw batch counting bad rows and one on the indexed rows
+    * counting `n_files`; the reject write runs only when the bad count
+    * is above zero. The forwarded events and the handshake are a few
+    * hundred bytes, so the driver appends them itself — one JSON-lines
+    * file per write point (the exit event and the handshake share
+    * one), written hidden and renamed to a unique `part-*.json`, so a
+    * reader of `eventsDir` sees whole files only. A replayed batch
+    * re-appends the same `(uuid, batch_id)`, which [[jobStates]]
+    * collapses.
     */
   def startWithProtocol(spark: SparkSession, inDir: String, outDir: String,
       rejectDir: String, eventsDir: String, checkpointDir: String,
@@ -132,42 +146,62 @@ object IncrementalIndexer {
     // (INDEXING on enter — reactor.py:160 literal — and still INDEXING
     // on exit, because `store.index(transition=False)` never moves the
     // state itself; FINISHED needs the second message).
-    def forward(batchId: Long, phase: String, nFiles: Long): Unit =
-      spark.range(1)
-        .select(lit(generatedBy).as("uuid"), lit("index").as("name"),
-          lit(phase).as("phase"), lit("INDEXING").as("job_state"),
-          lit(nFiles).as("n_files"), lit(batchId).as("batch_id"))
-        .write.mode("append").json(eventsDir)
+    def forward(batchId: Long, phase: String, nFiles: Long): Seq[(String, Any)] =
+      Seq("uuid" -> generatedBy, "name" -> "index", "phase" -> phase,
+        "job_state" -> "INDEXING", "n_files" -> nFiles, "batch_id" -> batchId)
     manifests.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bad = batch.where(
-          col("_corrupt").isNotNull || col("path").isNull)
-        val good = batch.where(
-          col("_corrupt").isNull && col("path").isNotNull).drop("_corrupt")
-        bad.withColumn("reject_reason",
-            when(col("_corrupt").isNotNull, "malformed_json")
-              .otherwise("missing_path"))
-          .write.mode("append").json(rejectDir)
-        if (settings.forwardEnter) forward(batchId, "state_enter", 0L)
+        val isBad = col("_corrupt").isNotNull || col("path").isNull
+        val badObs = Observation(s"graft_index_bad_$batchId")
+        val filesObs = Observation(s"graft_index_files_$batchId")
+        if (settings.forwardEnter)
+          appendEvents(spark, eventsDir, Seq(forward(batchId, "state_enter", 0L)))
+        val good = batch.observe(badObs, count(when(isBad, true)).as("bad"))
+          .where(!isBad).drop("_corrupt")
         val indexed = FileIndexer.index(good, "path", filters, generatedBy,
           defaultLevel)
-        indexed.write.mode("append")
+        indexed.observe(filesObs, count(lit(1)).as("n_files"))
+          .write.mode("append")
           .partitionBy("processing_level").parquet(outDir)
-        // this batch's indexed count (the reference's `len(resp)`) —
-        // recomputed on the tiny control-plane batch, never a rescan
+        // both counts came back with the write
+        if (badObs.get("bad").asInstanceOf[Long] > 0L)
+          batch.where(isBad).withColumn("reject_reason",
+              when(col("_corrupt").isNotNull, "malformed_json")
+                .otherwise("missing_path"))
+            .write.mode("append").json(rejectDir)
+        // this batch's indexed count (the reference's `len(resp)`),
+        // counted on the micro-batch as it was written — never a rescan
         // of the accumulated catalog
-        val nFiles = indexed.count()
-        if (settings.forwardExit) forward(batchId, "state_exit", nFiles)
+        val nFiles = filesObs.get("n_files").asInstanceOf[Long]
         // two-message protocol: tell the job manager we indexed — sent
         // in EVERY mode, standalone included (reactor.py:190-208)
-        spark.range(1)
-          .select(lit(generatedBy).as("uuid"), lit("indexed").as("name"),
-            lit(nFiles).as("n_files"), lit(batchId).as("batch_id"))
-          .write.mode("append").json(eventsDir)
+        val handshake = Seq("uuid" -> generatedBy, "name" -> "indexed",
+          "n_files" -> nFiles, "batch_id" -> batchId)
+        appendEvents(spark, eventsDir,
+          (if (settings.forwardExit) Seq(forward(batchId, "state_exit", nFiles))
+           else Nil) :+ handshake)
         ()
       }
       .start()
+  }
+
+  private val json = new ObjectMapper()
+
+  /** Append `events` to the event log at `eventsDir` as one new
+    * JSON-lines file (fields in the given order, null fields left out
+    * as Spark's JSON writer does), written hidden and renamed in.
+    */
+  private def appendEvents(spark: SparkSession, eventsDir: String,
+      events: Seq[Seq[(String, Any)]]): Unit = {
+    val lines = events.map { fields =>
+      val m = new java.util.LinkedHashMap[String, Any]()
+      fields.foreach { case (k, v) => if (v != null) m.put(k, v) }
+      json.writeValueAsString(m) + "\n"
+    }
+    graft.sources.CatalogIO.writeAtomically(spark,
+      s"$eventsDir/part-${java.util.UUID.randomUUID()}.json",
+      lines.mkString.getBytes("UTF-8"))
   }
 }

@@ -1,7 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.catalog.{FileIndexer, IndexRequests}
 import graft.catalog.FileIndexer.IndexFilter
 import graft.streaming.IncrementalIndexer
@@ -17,6 +23,41 @@ class IndexRequestsSpec extends GraftSpec {
     val dir = Files.createTempDirectory("graft_req")
     Files.writeString(dir.resolve("msgs.jsonl"), lines)
     dir.toString
+  }
+
+  /** One protocol pipeline's directories under a fresh temp root. */
+  private final class Proto(prefix: String) {
+    val base: Path = Files.createTempDirectory(prefix)
+    val in: Path = Files.createDirectories(base.resolve("in"))
+    def dir(name: String): String = base.resolve(name).toString
+    /** Land `manifest` as `in/<name>` and drain it on the one checkpoint. */
+    def drain(name: String, manifest: String, uuid: String): StreamingQuery = {
+      Files.writeString(in.resolve(name), manifest)
+      val q = IncrementalIndexer.startWithProtocol(spark, in.toString,
+        dir("catalog"), dir("rejected"), dir("events"), dir("chk"),
+        filters = Seq(IndexFilter("1", Seq("\\.csv$"))), generatedBy = uuid)
+      q.awaitTermination()
+      q
+    }
+    /** Every regular file under `name`, hidden ones included. */
+    def files(name: String): Seq[Path] = {
+      val root = base.resolve(name)
+      if (!Files.exists(root)) Nil
+      else {
+        val s = Files.walk(root)
+        try s.iterator().asScala.filter(Files.isRegularFile(_)).toVector
+        finally s.close()
+      }
+    }
+    def dataFiles(name: String): Seq[Path] = files(name).filterNot { f =>
+      val n = f.getFileName.toString
+      n.startsWith(".") || n.startsWith("_")
+    }
+    def states(uuid: String): Seq[(String, Long, Long)] =
+      IncrementalIndexer.jobStates(spark.read.json(dir("events")))
+        .where(col("uuid") === uuid)
+        .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3)))
+        .toSeq
   }
 
   test("good messages validate; bad messages dead-letter with reasons") {
@@ -341,5 +382,117 @@ class IndexRequestsSpec extends GraftSpec {
     // two-message handshake still sends (reactor.py:190-208)
     assert(run(ProtocolSettings(stateEnter = true, stateExit = true,
       standalone = true)) == (Seq.empty, 1L))
+  }
+
+  test("a clean one-file manifest drains in one Spark job and writes " +
+    "no reject file") {
+    val p = new Proto("graft_jobs")
+    // jobs are tagged with the streaming query's id; a sentinel job from
+    // this thread, seen after them on the same listener queue, proves
+    // every earlier job start has been delivered
+    val sentinel = s"graft-jobs-sentinel-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { props =>
+          Seq("sql.streaming.queryId", "spark.jobGroup.id")
+            .flatMap(k => Option(props.getProperty(k))).foreach(seen.add)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val q = p.drain("m1.jsonl",
+        """{"doc_id": 1, "path": "a/x.csv", "n_chars": 10}
+          |{"doc_id": 2, "path": "a/y.csv", "n_chars": 20}
+          |""".stripMargin, "job-J")
+      sc.setJobGroup(sentinel, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(sentinel), "listener never saw the sentinel job")
+      // the catalog write is the batch's only job: the bad-row and
+      // n_files counts ride it, the events are driver-side appends
+      assert(seen.asScala.count(_ == q.id.toString) == 1)
+    } finally sc.removeSparkListener(listener)
+    assert(p.files("rejected").isEmpty)
+    assert(p.states("job-J") == Seq(("FINISHED", 2L, 1L)))
+  }
+
+  test("an all-bad manifest rejects every row with its reason, indexes " +
+    "nothing and still hands off n_files = 0") {
+    val p = new Proto("graft_allbad")
+    p.drain("m1.jsonl",
+      """not json
+        |{"doc_id": 3, "n_chars": 30}
+        |{"doc_id": 4, "path": null, "n_chars": 40}
+        |""".stripMargin, "job-B")
+    assert(spark.read.json(p.dir("rejected")).select("reject_reason")
+      .collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("malformed_json", "missing_path", "missing_path"))
+    assert(!p.files("catalog").exists(_.toString.endsWith(".parquet")))
+    assert(p.states("job-B") == Seq(("FINISHED", 0L, 1L)))
+  }
+
+  test("a clean manifest that matches no filter hands off n_files = 0 " +
+    "and rejects nothing") {
+    val p = new Proto("graft_nomatch")
+    p.drain("m1.jsonl",
+      """{"doc_id": 1, "path": "a/x.txt", "n_chars": 10}
+        |{"doc_id": 2, "path": "a/y.log", "n_chars": 20}
+        |""".stripMargin, "job-N")
+    assert(p.files("rejected").isEmpty)
+    assert(!p.files("catalog").exists(_.toString.endsWith(".parquet")))
+    val evs = spark.read.json(p.dir("events"))
+    assert(evs.where(col("name") === "index")
+      .select("phase", "n_files").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("state_exit", 0L)))
+    assert(p.states("job-N") == Seq(("FINISHED", 0L, 1L)))
+  }
+
+  test("event files land whole: no tmp leftovers, every visible file " +
+    "parses as complete JSON lines") {
+    val p = new Proto("graft_evfiles")
+    p.drain("m1.jsonl",
+      """{"doc_id": 1, "path": "a/x.csv", "n_chars": 10}
+        |""".stripMargin, "job-E")
+    p.drain("m2.jsonl",
+      """{"doc_id": 2, "path": "a/y.csv", "n_chars": 20}
+        |{"doc_id": 3, "path": "a/z.txt", "n_chars": 30}
+        |""".stripMargin, "job-E")
+    assert(!p.files("events").exists(_.getFileName.toString.endsWith(".tmp")))
+    val visible = p.dataFiles("events")
+    // one file per batch: the exit event and the handshake share it
+    assert(visible.size == 2)
+    val mapper = new ObjectMapper()
+    val lines = visible.flatMap { f =>
+      val text = Files.readString(f)
+      assert(text.endsWith("\n"), s"$f ends mid-line")
+      text.split("\n").toSeq
+    }
+    val names = lines.map(l => mapper.readTree(l).get("name").asText())
+    assert(names.sorted == Seq("index", "index", "indexed", "indexed"))
+    assert(p.states("job-E") == Seq(("FINISHED", 2L, 2L)))
+  }
+
+  test("jobStates folds on one uuid partitioning: a single Exchange, " +
+    "duplicates collapsed") {
+    val sp = spark
+    import sp.implicits._
+    val events = Seq(
+      ("u1", "indexed", 2L, 0L), ("u1", "indexed", 2L, 0L),
+      ("u1", "indexed", 3L, 1L), ("u2", "indexed", 0L, 0L),
+      ("u2", "index", 5L, 0L))
+      .toDF("uuid", "name", "n_files", "batch_id")
+    val states = IncrementalIndexer.jobStates(events)
+    object Plans extends AdaptiveSparkPlanHelper
+    val exchanges = Plans.collect(states.queryExecution.executedPlan) {
+      case e: ShuffleExchangeLike => e
+    }
+    assert(exchanges.size == 1, states.queryExecution.executedPlan.toString)
+    assert(states.collect().map(_.toSeq).toSet == Set(
+      Seq("u1", "FINISHED", 5L, 2L), Seq("u2", "FINISHED", 0L, 1L)))
   }
 }
