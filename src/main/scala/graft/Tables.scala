@@ -83,28 +83,22 @@ object Tables {
     * [[saturatedSlot]] auto profile to size-gate plan shape without
     * paying a data scan: footers are metadata-plane at any volume.
     */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   def parquetRowCount(spark: SparkSession, dir: String,
-      name: String): Long = {
-    val path = s"$dir/$name.parquet"
-    val cached = rowCountCache.get(path)
-    if (cached != null) return cached.longValue()
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    var total = 0L
-    ParquetFiles.list(spark, path).foreach { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), conf))
-      try total += reader.getFooter.getBlocks.asScala
-        .map(_.getRowCount).sum
-      finally reader.close()
-    }
-    rowCountCache.put(path, java.lang.Long.valueOf(total))
-    total
-  }
+      name: String): Long =
+    JvmMemo.getOrCompute("rows", name, dir) {
+      import scala.jdk.CollectionConverters._
+      val conf = spark.sparkContext.hadoopConfiguration
+      var total = 0L
+      ParquetFiles.list(spark, s"$dir/$name.parquet").foreach { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), conf))
+        try total += reader.getFooter.getBlocks.asScala
+          .map(_.getRowCount).sum
+        finally reader.close()
+      }
+      java.lang.Long.valueOf(total)
+    }.longValue()
 
   /** Saturated-cluster profile dial: `spark.graft.clusterSaturated`
     * (`true` | `false` | `auto`, default auto). The graph family's

@@ -44,7 +44,7 @@ object FileIndexer {
   def index(files: DataFrame, pathCol: String, filters: Seq[IndexFilter],
       generatedBy: String, defaultLevel: String = "1"): DataFrame = {
     val level =
-      if (filters.isEmpty) lit(defaultLevel)
+      if (filters.isEmpty) lit(defaultLevel).cast("string")
       else levelFor(col(pathCol), filters)
     files
       .withColumn("processing_level", level)

@@ -608,23 +608,22 @@ object Apex {
       .delete(p, true)
   }
 
-  /** Per-(file, ROW GROUP) min/max/count of an integer column read
-    * from REAL parquet footers under `path` — the row-group-granular
-    * form of [[readFooterDayStats]] for the #337 executor: one row per
-    * (data file, row-group ordinal). Row groups are the unit parquet
-    * actually skips at (a reader can drop a row group of a file it
-    * must otherwise open); file-level stats are just the fold of
-    * these. Listing is driver-side metadata; footer decoding runs
-    * distributed on executors.
+  /** Per-(file, ROW GROUP, stat column) min/max/count of integer
+    * columns read from REAL parquet footers under `path`: one row per
+    * (data file, row-group ordinal, column in `statCols`). Row groups
+    * are the unit parquet actually skips at (a reader can drop a row
+    * group of a file it must otherwise open); the per-file readers
+    * below are folds of these rows. Listing is driver-side metadata;
+    * footer decoding runs distributed on executors.
     */
   def readFooterRowGroupStats(spark: SparkSession, path: String,
-      statCol: String): DataFrame = {
+      statCols: String*): DataFrame = {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     val files = graft.ParquetFiles.list(spark, path)
     val serConf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val c = statCol
+    val colsB = statCols.toList
     spark.createDataset(files.toSeq)
       .repartition(math.max(1, math.min(files.size, 32)))
       .mapPartitions { part =>
@@ -633,22 +632,23 @@ object Apex {
             .fromPath(new org.apache.hadoop.fs.Path(p), serConf.value)
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try {
-            reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map {
-              case (b, i) =>
+            reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap {
+              case (b, i) => colsB.map { c =>
                 val cc = b.getColumns.asScala
                   .find(_.getPath.toDotString == c)
                   .getOrElse(throw new IllegalStateException(
                     s"no '$c' column chunk in $p"))
                 val st = cc.getStatistics
-                (p, i,
+                (p, i, c,
                   st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
                   st.genericGetMax.asInstanceOf[java.lang.Long].longValue,
                   b.getRowCount)
+              }
             }
           } finally reader.close()
         }
       }
-      .toDF("path", "rg_idx", "min_v", "max_v", "n_rows")
+      .toDF("path", "rg_idx", "stat_col", "min_v", "max_v", "n_rows")
   }
 
   /** Physically read ONLY the named row groups of each file —
@@ -705,48 +705,17 @@ object Apex {
   }
 
   /** Per-(file, column) min/max/count of integer columns read from
-    * REAL parquet footers under `path` — the general form of
-    * [[readFooterDayStats]] for multi-dimension audits (#324): one row
-    * per (data file, stat column), long format so callers pivot with
-    * ordinary aggregation. Listing is driver-side metadata; footer
-    * decoding runs distributed on executors.
+    * REAL parquet footers under `path` — the row-group stats folded per
+    * file, for multi-dimension audits (#324): one row per (data file,
+    * stat column), long format so callers pivot with ordinary
+    * aggregation.
     */
   def readFooterLongStats(spark: SparkSession, path: String,
-      statCols: Seq[String]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val files = graft.ParquetFiles.list(spark, path)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val colsB = statCols
-    spark.createDataset(files.toSeq)
-      .repartition(math.max(1, math.min(files.size, 32)))
-      .mapPartitions { part =>
-        part.flatMap { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(p), serConf.value)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            val blocks = reader.getFooter.getBlocks.asScala.toSeq
-            colsB.map { c =>
-              val stats = blocks.map { b =>
-                val cc = b.getColumns.asScala
-                  .find(_.getPath.toDotString == c)
-                  .getOrElse(throw new IllegalStateException(
-                    s"no '$c' column chunk in $p"))
-                val st = cc.getStatistics
-                (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-                  st.genericGetMax.asInstanceOf[java.lang.Long].longValue,
-                  b.getRowCount)
-              }
-              (p, c, stats.map(_._1).min, stats.map(_._2).max,
-                stats.map(_._3).sum)
-            }
-          } finally reader.close()
-        }
-      }
-      .toDF("path", "stat_col", "min_v", "max_v", "n_rows")
-  }
+      statCols: Seq[String]): DataFrame =
+    readFooterRowGroupStats(spark, path, statCols: _*)
+      .groupBy("path", "stat_col")
+      .agg(min("min_v").as("min_v"), max("max_v").as("max_v"),
+        sum("n_rows").as("n_rows"))
 
   /** Per-(file, probe-key) skipping audit off REAL parquet footers:
     * for every data file under `path` and every key in `keys`, read
@@ -810,46 +779,17 @@ object Apex {
 
   /** Per-FILE min/max/count of the `day` column read from REAL parquet
     * footers under `path` (one row per data file; row-group stats are
-    * folded per file). Listing is driver-side metadata (exactly what
-    * any scan's file index does); footer decoding runs on executors.
+    * folded per file), tagged with the `month=` partition directory the
+    * file sits in.
     */
-  def readFooterDayStats(spark: SparkSession, path: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val files = graft.ParquetFiles.list(spark, path).map { p =>
-      // partition-dir name carries the month (…/month=YYYY-MM/file)
-      val month = new org.apache.hadoop.fs.Path(p)
-        .getParent.getName.stripPrefix("month=")
-      (p, month)
-    }
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    spark.createDataset(files.toSeq)
-      .repartition(math.max(1, math.min(files.size, 32)))
-      .mapPartitions { part =>
-        part.map { case (p, month) =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(p), serConf.value)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            val blocks = reader.getFooter.getBlocks.asScala
-            val stats = blocks.map { b =>
-              val cc = b.getColumns.asScala
-                .find(_.getPath.toDotString == "day")
-                .getOrElse(throw new IllegalStateException(
-                  s"no 'day' column chunk in $p"))
-              val st = cc.getStatistics
-              (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-                st.genericGetMax.asInstanceOf[java.lang.Long].longValue,
-                b.getRowCount)
-            }
-            (month, p, stats.map(_._1).min, stats.map(_._2).max,
-              stats.map(_._3).sum)
-          } finally reader.close()
-        }
-      }
-      .toDF("month", "path", "min_day", "max_day", "n_rows")
-  }
+  def readFooterDayStats(spark: SparkSession, path: String): DataFrame =
+    readFooterRowGroupStats(spark, path, "day")
+      .groupBy("path")
+      .agg(min("min_v").as("min_day"), max("max_v").as("max_day"),
+        sum("n_rows").as("n_rows"))
+      .select(regexp_replace(element_at(split(col("path"), "/"), -2),
+          "^month=", "").as("month"),
+        col("path"), col("min_day"), col("max_day"), col("n_rows"))
 
   val layoutFooterAuditSql: String =
     s"""WITH o AS (

@@ -956,8 +956,8 @@ object Corpus {
     // learned ONCE per (dir, nMerges) per JVM: the merge ranking is a
     // deterministic pure function of the corpus, re-derived identically
     // by 7 registered queries (and every Bench pass) before r12 — see
-    // DerivedCache. Consumers still run their full encode plans.
-    graft.DerivedCache.getOrCompute(s"bpe_merges_$nMerges", dir) {
+    // JvmMemo. Consumers still run their full encode plans.
+    graft.JvmMemo.getOrCompute("value", s"bpe_merges_$nMerges", dir) {
       bpeLearnMergesUncached(spark, dir, nMerges)
     }
 
@@ -1016,11 +1016,9 @@ object Corpus {
     // (several through 2-3 plan branches each), and "tokenize once,
     // account everywhere" is the production contract this family
     // models. Doc-count-sized skinny columns; schema-pinned read.
-    val plan = bpeDocTokensPlan(spark, dir, nMerges)
-    val path = LayoutCache.getOrWrite(s"bpe_doc_tokens_$nMerges", dir) {
-      tmp => plan.write.mode("overwrite").parquet(tmp)
+    LayoutCache.table(s"bpe_doc_tokens_$nMerges", dir) {
+      bpeDocTokensPlan(spark, dir, nMerges)
     }
-    spark.read.schema(plan.schema).parquet(path)
   }
 
   private def bpeDocTokensPlan(spark: SparkSession, dir: String,
@@ -1387,9 +1385,9 @@ object Corpus {
     */
   private[graft] def unigramVocabCandidates(spark: SparkSession,
       dir: String): (Seq[(String, Long)], Seq[(String, Long)]) =
-    // one learn per (dir) per JVM — the DerivedCache discipline (see
+    // one learn per (dir) per JVM through JvmMemo (see
     // bpeLearnMerges); 3 registered queries share this collect.
-    graft.DerivedCache.getOrCompute("unigram_cand", dir) {
+    graft.JvmMemo.getOrCompute("value", "unigram_cand", dir) {
       unigramVocabCandidatesUncached(spark, dir)
     }
 
@@ -1445,11 +1443,7 @@ object Corpus {
       dir: String): DataFrame = {
     // r12: materialized once per (dir) per JVM — the bpeDocTokens
     // discipline (see there); consumed by #357 and the #360 eval.
-    val plan = unigramDocTokensPlan(spark, dir)
-    val path = LayoutCache.getOrWrite("uni_doc_tokens", dir) { tmp =>
-      plan.write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.schema(plan.schema).parquet(path)
+    LayoutCache.table("uni_doc_tokens", dir)(unigramDocTokensPlan(spark, dir))
   }
 
   // private[graft]: BroadcastGateSpec pins the attach-join gate on THIS
@@ -1959,9 +1953,9 @@ object Corpus {
     */
   private[graft] def wordpieceVocabRanked(spark: SparkSession,
       dir: String): (Seq[String], Seq[String]) =
-    // one learn per (dir) per JVM — the DerivedCache discipline (see
+    // one learn per (dir) per JVM through JvmMemo (see
     // bpeLearnMerges); 3 registered queries share these two collects.
-    graft.DerivedCache.getOrCompute("wp_vocab", dir) {
+    graft.JvmMemo.getOrCompute("value", "wp_vocab", dir) {
       wordpieceVocabRankedUncached(spark, dir)
     }
 
@@ -2013,11 +2007,7 @@ object Corpus {
       dir: String): DataFrame = {
     // r12: materialized once per (dir) per JVM — the bpeDocTokens
     // discipline (see there); consumed by #366 and the #360 eval.
-    val plan = wordpieceDocTokensPlan(spark, dir)
-    val path = LayoutCache.getOrWrite("wp_doc_tokens", dir) { tmp =>
-      plan.write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.schema(plan.schema).parquet(path)
+    LayoutCache.table("wp_doc_tokens", dir)(wordpieceDocTokensPlan(spark, dir))
   }
 
   private def wordpieceDocTokensPlan(spark: SparkSession,

@@ -156,13 +156,10 @@ object Dedup {
     * empty frame.
     */
   private[graft] def minhashPairsDefaultCached(spark: SparkSession,
-      dir: String): DataFrame = {
-    val pairs = dedupMinhashLsh(spark, dir, numHashes = 16, bandRows = 4)
-    val path = LayoutCache.getOrWrite("minhash_pairs_16_4", dir) { tmp =>
-      pairs.write.mode("overwrite").parquet(tmp)
+      dir: String): DataFrame =
+    LayoutCache.table("minhash_pairs_16_4", dir) {
+      dedupMinhashLsh(spark, dir, numHashes = 16, bandRows = 4)
     }
-    spark.read.schema(pairs.schema).parquet(path)
-  }
 
   def dedupMinhashLsh(spark: SparkSession, dir: String, numHashes: Int,
       bandRows: Int): DataFrame = {

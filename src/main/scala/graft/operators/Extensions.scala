@@ -30,16 +30,11 @@ object Extensions {
     // dominant remaining cost once the pair table is cached. The loop
     // reads the LayoutCache-materialized pair table directly (no
     // consumer-side sort — propagation is order-free).
-    // built INSIDE the write lambda: clusterPairs runs driver-side
-    // fixpoint actions at construction time, which a cache hit must
-    // not re-pay
-    val path = LayoutCache.getOrWrite("dedup_cluster_m16_4", dir) { tmp =>
+    // the plan is by-name: clusterPairs runs driver-side fixpoint
+    // actions at construction time, which a cache hit must not re-pay
+    LayoutCache.table("dedup_cluster_m16_4", dir) {
       clusterPairs(Dedup.minhashPairsDefaultCached(spark, dir), "doc_id")
-        .write.mode("overwrite").parquet(tmp)
-    }
-    spark.read
-      .schema("doc_id BIGINT, cluster_root BIGINT, cluster_size BIGINT")
-      .parquet(path).orderBy("doc_id")
+    }.orderBy("doc_id")
   }
 
   /** Connected components over an arbitrary undirected pair list

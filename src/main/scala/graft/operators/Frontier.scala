@@ -73,11 +73,7 @@ object Frontier {
     // r12: materialized once per (dir) per JVM — shared by #160
     // text_perplexity and #161 corpus_quality_buckets, each of which
     // previously re-ran the bigram-LM build + per-doc scoring.
-    val plan = docSurprisalPlan(spark, dir)
-    val path = LayoutCache.getOrWrite("doc_surprisal", dir) { tmp =>
-      plan.write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.schema(plan.schema).parquet(path)
+    LayoutCache.table("doc_surprisal", dir)(docSurprisalPlan(spark, dir))
   }
 
   private def docSurprisalPlan(spark: SparkSession,

@@ -75,7 +75,7 @@ object Graph {
     // safe BECAUSE the result is structure-sized: the floor keeps
     // |edges| tracking catalog structure, not data volume (probed to
     // 100×); an unfloored variant must not reuse this path.
-    val path = LayoutCache.getOrWrite("graph_edges_s2_sup", dir) { tmp =>
+    LayoutCache.table("graph_edges_s2_sup", dir) {
       // the SETS derivation, not the self-join: one shuffle groups
       // lineitem into per-order part sets, pairs explode map-side and
       // the support count is map-side-combinable — no countDistinct
@@ -87,11 +87,8 @@ object Graph {
       // 100× the distinct-pair cardinality — SPILL_probe100_r23), and
       // every SUBSEQUENT graph query probes zero-spill off the cached
       // file. GraphSpec pins the two variants row-identical.
-      undirectedViaSets(spark, dir, minSupport = 2)
-        .repartition(1)
-        .write.mode("overwrite").parquet(tmp)
+      undirectedViaSets(spark, dir, minSupport = 2).repartition(1)
     }
-    spark.read.parquet(path)
   }
 
   /** The derivation behind [[undirected]]'s cache: ONE shuffle groups

@@ -550,13 +550,8 @@ object Horizon {
     * frame.
     */
   private[operators] def portableSigCached(spark: SparkSession,
-      dir: String): DataFrame = {
-    val sigDf = portableSig(spark, dir)
-    val path = LayoutCache.getOrWrite("portable_sig", dir) { tmp =>
-      sigDf.write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.schema(sigDf.schema).parquet(path)
-  }
+      dir: String): DataFrame =
+    LayoutCache.table("portable_sig", dir)(portableSig(spark, dir))
 
   /** The SCORED default-banding candidates — (id_a, id_b, agree,
     * inter, uni) over [[portableCandidates]] of the cached signature
@@ -569,25 +564,22 @@ object Horizon {
     * aggregations over it, byte-identical to their previous results.
     */
   private[operators] def portableScoredCached(spark: SparkSession,
-      dir: String): DataFrame = {
-    val sig = portableSigCached(spark, dir)
-    val side = sig.select(col("doc_id"), col("sh"), col("sig"))
-    val scored = portableCandidates(sig)
-      .join(Tables.maybeBroadcast(side.toDF("id_a", "sh_a", "sig_a")), "id_a")
-      .join(Tables.maybeBroadcast(side.toDF("id_b", "sh_b", "sig_b")), "id_b")
-      .withColumn("agree", expr(
-        "size(filter(sequence(1, 16), k -> sig_a[k - 1] = sig_b[k - 1]))")
-        .cast("long"))
-      .withColumn("inter",
-        expr("size(array_intersect(sh_a, sh_b))").cast("long"))
-      .withColumn("uni",
-        (expr("size(sh_a)") + expr("size(sh_b)")).cast("long") - col("inter"))
-      .select("id_a", "id_b", "agree", "inter", "uni")
-    val path = LayoutCache.getOrWrite("portable_scored", dir) { tmp =>
-      scored.write.mode("overwrite").parquet(tmp)
+      dir: String): DataFrame =
+    LayoutCache.table("portable_scored", dir) {
+      val sig = portableSigCached(spark, dir)
+      val side = sig.select(col("doc_id"), col("sh"), col("sig"))
+      portableCandidates(sig)
+        .join(Tables.maybeBroadcast(side.toDF("id_a", "sh_a", "sig_a")), "id_a")
+        .join(Tables.maybeBroadcast(side.toDF("id_b", "sh_b", "sig_b")), "id_b")
+        .withColumn("agree", expr(
+          "size(filter(sequence(1, 16), k -> sig_a[k - 1] = sig_b[k - 1]))")
+          .cast("long"))
+        .withColumn("inter",
+          expr("size(array_intersect(sh_a, sh_b))").cast("long"))
+        .withColumn("uni",
+          (expr("size(sh_a)") + expr("size(sh_b)")).cast("long") - col("inter"))
+        .select("id_a", "id_b", "agree", "inter", "uni")
     }
-    spark.read.schema(scored.schema).parquet(path)
-  }
 
   def dedupMinhashEst(spark: SparkSession, dir: String): DataFrame =
     portableScoredCached(spark, dir)

@@ -214,12 +214,9 @@ object Similarity {
     // table (#71 itself, #76 dedup_semantic's cluster edges, #236
     // embed_label_consistency), each previously re-running the
     // bucket self-join + per-vector ranking window.
-    val plan = annKnnGraph(spark, dir, bits = 6, k = 3)
-    val path = LayoutCache.getOrWrite("ann_knn_graph_6_3", dir) { tmp =>
-      plan.write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.schema(plan.schema).parquet(path)
-      .orderBy("vec_id", "rank")
+    LayoutCache.table("ann_knn_graph_6_3", dir) {
+      annKnnGraph(spark, dir, bits = 6, k = 3)
+    }.orderBy("vec_id", "rank")
   }
 
   def annKnnGraph(spark: SparkSession, dir: String, bits: Int,
@@ -840,11 +837,9 @@ object Similarity {
     */
   private[operators] def ivfCentroidsFullCached(spark: SparkSession,
       dir: String): DataFrame = {
-    val plan = ivfCentroids(Tables.spread(spark, dir, "embeddings"))
-    val path = LayoutCache.getOrWrite("ivf_centroids_full", dir) { tmp =>
-      plan.write.mode("overwrite").parquet(tmp)
+    LayoutCache.table("ivf_centroids_full", dir) {
+      ivfCentroids(Tables.spread(spark, dir, "embeddings"))
     }
-    spark.read.schema(plan.schema).parquet(path)
   }
 
   /** IVF ANN over an arbitrary corpus (`vec_id`, `label`, `embedding`;
@@ -997,15 +992,12 @@ object Similarity {
     * broadcast + N×cells argmin window.
     */
   private def ivfAssignedCached(spark: SparkSession,
-      dir: String): DataFrame = {
-    val v = Tables.spread(spark, dir, "embeddings")
-    val plan = ivfAssign(v.where(col("vec_id") % 4 =!= 3),
-      v.where(col("vec_id") % 4 === 3))
-    val path = LayoutCache.getOrWrite("ivf_assigned_w4", dir) { tmp =>
-      plan.write.mode("overwrite").parquet(tmp)
+      dir: String): DataFrame =
+    LayoutCache.table("ivf_assigned_w4", dir) {
+      val v = Tables.spread(spark, dir, "embeddings")
+      ivfAssign(v.where(col("vec_id") % 4 =!= 3),
+        v.where(col("vec_id") % 4 === 3))
     }
-    spark.read.schema(plan.schema).parquet(path)
-  }
 
   def annIvfIncremental(spark: SparkSession, dir: String): DataFrame = {
     val v = Tables.spread(spark, dir, "embeddings")
@@ -1322,11 +1314,9 @@ object Similarity {
     // every prior iteration under each broadcast, and TWO registered
     // queries consume the identical table (#101 itself and #239
     // ann_ivf_balance, which audits this exact partition).
-    val plan = kmeansLloyd(spark, dir, k = 8, iters = 2)
-    val path = LayoutCache.getOrWrite("kmeans_assign_8_2", dir) { tmp =>
-      plan.write.mode("overwrite").parquet(tmp)
-    }
-    spark.read.schema(plan.schema).parquet(path).orderBy("vec_id")
+    LayoutCache.table("kmeans_assign_8_2", dir) {
+      kmeansLloyd(spark, dir, k = 8, iters = 2)
+    }.orderBy("vec_id")
   }
 
   def kmeansLloyd(spark: SparkSession, dir: String, k: Int,
@@ -1444,11 +1434,9 @@ object Similarity {
   private[operators] def pqModel(spark: SparkSession, dir: String,
       m: Int, ksub: Int): (DataFrame, DataFrame) = {
     require(64 % m == 0, s"m must divide 64, got $m")
-    val v = Tables.spread(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val parts = pqSubspaces(v, "vec_id", "embedding", "sv", m)
-    val seedC = parts.where(col("vec_id") < ksub)
-      .select(col("s"), col("vec_id").as("cid"), col("sv").as("cv"))
+    // lazy: a cache hit on both tables builds no plan at all
+    lazy val parts = pqSubspaces(Tables.spread(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding")), "vec_id", "embedding", "sv", m)
     def assign(cent: DataFrame): DataFrame = parts
       .join(broadcast(cent), "s")
       .withColumn("dist", pqSqDist("sv", "cv"))
@@ -1463,24 +1451,20 @@ object Similarity {
     // recenter → encode train pipeline — and ann_pq's own plan computed
     // `cent` twice (once under `coded`, once for the query ADC table).
     // Consumers read the small parquet back; the encode pass (the
-    // corpus-sized argmin) runs once as the codedPlan write.
-    val centPlan = assign(seedC).join(parts, Seq("vec_id", "s"))
-      .select(col("s"), col("cid"), posexplode(col("sv")).as(Seq("d", "x")))
-      .groupBy("s", "cid", "d")
-      .agg((sum(col("x").cast("decimal(28,12)")) / count(lit(1)))
-        .cast("double").as("c"))
-      .groupBy("s", "cid")
-      .agg(expr("transform(array_sort(collect_list(struct(d, c))), " +
-        "t -> t.c)").as("cv"))
-    val centPath = LayoutCache.getOrWrite(s"pq_cent_${m}_$ksub", dir) {
-      tmp => centPlan.write.mode("overwrite").parquet(tmp)
+    // corpus-sized argmin) runs once as the coded table's write.
+    val cent = LayoutCache.table(s"pq_cent_${m}_$ksub", dir) {
+      val seedC = parts.where(col("vec_id") < ksub)
+        .select(col("s"), col("vec_id").as("cid"), col("sv").as("cv"))
+      assign(seedC).join(parts, Seq("vec_id", "s"))
+        .select(col("s"), col("cid"), posexplode(col("sv")).as(Seq("d", "x")))
+        .groupBy("s", "cid", "d")
+        .agg((sum(col("x").cast("decimal(28,12)")) / count(lit(1)))
+          .cast("double").as("c"))
+        .groupBy("s", "cid")
+        .agg(expr("transform(array_sort(collect_list(struct(d, c))), " +
+          "t -> t.c)").as("cv"))
     }
-    val cent = spark.read.schema(centPlan.schema).parquet(centPath)
-    val codedPlan = assign(cent)
-    val codedPath = LayoutCache.getOrWrite(s"pq_coded_${m}_$ksub", dir) {
-      tmp => codedPlan.write.mode("overwrite").parquet(tmp)
-    }
-    (cent, spark.read.schema(codedPlan.schema).parquet(codedPath))
+    (cent, LayoutCache.table(s"pq_coded_${m}_$ksub", dir)(assign(cent)))
   }
 
   def annPq(spark: SparkSession, dir: String, k: Int, m: Int,

@@ -929,10 +929,6 @@ object Zenith {
     * broadcast, the top-20 a TakeOrdered — no full sort.
     */
   def graphHits(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-    val o = Tables(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
     // the distinct bipartite edge list is referenced by all three
     // half-iterations (a1, h1, a2): before r12 it was recomputed 3×
     // under the idle profile and persisted (but still 36.8 GB of spill
@@ -950,13 +946,15 @@ object Zenith {
     // scratch filesystem, which is exactly what
     // `spark.graft.cacheRoot` configures (LayoutCache resolves cached
     // trees under it; default stays java.io.tmpdir for local runs).
-    val eDf = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
-      .distinct()
-    val ePath = LayoutCache.getOrWrite("graph_hits_edges", dir) { tmp =>
-      eDf.write.mode("overwrite").parquet(tmp)
+    val e = LayoutCache.table("graph_hits_edges", dir) {
+      val li = Tables(spark, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey"))
+      val o = Tables(spark, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"))
+      li.join(o, col("l_orderkey") === col("o_orderkey"))
+        .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
+        .distinct()
     }
-    val e = spark.read.schema(eDf.schema).parquet(ePath)
     val a1 = e.groupBy("p").agg(count(lit(1)).as("n_buyers"))
     val h1 = e.join(a1, "p").groupBy("u").agg(sum("n_buyers").as("h1"))
     val a2 = e.join(h1, "u").groupBy("p")

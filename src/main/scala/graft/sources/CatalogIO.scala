@@ -119,4 +119,17 @@ object CatalogIO {
     if (!fs.rename(tmp, target))
       throw new IllegalStateException(s"rename $tmp -> $target failed")
   }
+
+  /** The UTF-8 text of a small marker file (one written by
+    * [[writeAtomically]]); None when it does not exist.
+    */
+  def readMarker(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
+  }
 }

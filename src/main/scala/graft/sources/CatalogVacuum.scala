@@ -113,20 +113,10 @@ object CatalogVacuum {
     */
   private def writeCoverage(spark: SparkSession, tablePath: String,
       watermark: String, counts: Map[String, (Long, Long)]): Unit = {
-    val f = fs(spark, tablePath)
-    val dir = new Path(tablePath, coverageDir)
-    if (!f.exists(dir)) f.mkdirs(dir)
-    val target = new Path(dir, s"w=$watermark")
-    val tmp = new Path(dir, s"w=$watermark.tmp")
-    val out = f.create(tmp, true)
-    try {
-      val body = counts.toSeq.sortBy(_._1)
-        .map { case (s, (c, m)) => s"$s\t$c\t$m" }.mkString("\n")
-      out.write(body.getBytes("UTF-8"))
-    } finally out.close()
-    f.delete(target, false)
-    if (!f.rename(tmp, target)) throw new IllegalStateException(
-      s"coverage receipt rename $tmp -> $target failed")
+    val body = counts.toSeq.sortBy(_._1)
+      .map { case (s, (c, m)) => s"$s\t$c\t$m" }.mkString("\n")
+    CatalogIO.writeAtomically(spark, s"$tablePath/$coverageDir/w=$watermark",
+      body.getBytes("UTF-8"))
   }
 
   /** The coverage receipt for snapshot `watermark`; None when the
@@ -134,21 +124,12 @@ object CatalogVacuum {
     * delete anything it cannot prove folded).
     */
   private def readCoverage(spark: SparkSession, tablePath: String,
-      watermark: String): Option[Map[String, (Long, Long)]] = {
-    val f = fs(spark, tablePath)
-    val p = new Path(new Path(tablePath, coverageDir), s"w=$watermark")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val body = scala.io.Source.fromInputStream(in).mkString
-        Some(body.split("\n").filter(_.nonEmpty).map { line =>
-          val Array(s, c, m) = line.split("\t")
-          s -> (c.toLong, m.toLong)
-        }.toMap)
-      } finally in.close()
-    }
-  }
+      watermark: String): Option[Map[String, (Long, Long)]] =
+    CatalogIO.readMarker(spark, s"$tablePath/$coverageDir/w=$watermark")
+      .map(_.split("\n").filter(_.nonEmpty).map { line =>
+        val Array(s, c, m) = line.split("\t")
+        s -> (c.toLong, m.toLong)
+      }.toMap)
 
   /** Append change records (data cols + op ∈ upsert|delete, monotone
     * seq, eff DATE) into month segments.
@@ -184,18 +165,9 @@ object CatalogVacuum {
   /** The earliest servable cutoff (set by [[vacuum]]); None before the
     * first vacuum.
     */
-  def vacuumFloor(spark: SparkSession, tablePath: String): Option[String] = {
-    val f = fs(spark, tablePath)
-    val p = new Path(tablePath, floorMarker)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val s = scala.io.Source.fromInputStream(in).mkString.trim
-        if (s.isEmpty) None else Some(s)
-      } finally in.close()
-    }
-  }
+  def vacuumFloor(spark: SparkSession, tablePath: String): Option[String] =
+    CatalogIO.readMarker(spark, s"$tablePath/$floorMarker")
+      .map(_.trim).filter(_.nonEmpty)
 
   /** State as of `cutoff` (a `yyyy-MM-dd` date string): the latest
     * snapshot ≤ cutoff plus every surviving log change with
@@ -343,12 +315,8 @@ object CatalogVacuum {
       case Some(old) if old >= wCov => old
       case _ => wCov
     }
-    val tmp = new Path(tablePath, floorMarker + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(floor.getBytes("UTF-8")) finally out.close()
-    f.delete(new Path(tablePath, floorMarker), false)
-    if (!f.rename(tmp, new Path(tablePath, floorMarker)))
-      throw new IllegalStateException(s"floor marker rename failed")
+    CatalogIO.writeAtomically(spark, s"$tablePath/$floorMarker",
+      floor.getBytes("UTF-8"))
 
     VacuumStats(floor, vacuumable, oldSnaps,
       segs.filterNot(vacuumable.toSet))

@@ -44,16 +44,9 @@ object CompactionLoop {
       spark.sparkContext.hadoopConfiguration)
 
   /** Highest seq folded into the base; -1 before the first compaction. */
-  def watermark(spark: SparkSession, tableDir: String): Long = {
-    val f = fs(spark, tableDir)
-    val p = new Path(tableDir, marker)
-    if (!f.exists(p)) -1L
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
+  def watermark(spark: SparkSession, tableDir: String): Long =
+    CatalogIO.readMarker(spark, s"$tableDir/$marker")
+      .map(_.trim.toLong).getOrElse(-1L)
 
   /** Change records not yet folded into the base (replayed duplicates
     * of folded batches filter out here — the exactly-once boundary).

@@ -165,8 +165,11 @@ object IncrementalIndexer {
         indexed.observe(filesObs, count(lit(1)).as("n_files"))
           .write.mode("append")
           .partitionBy("processing_level").parquet(outDir)
-        // both counts came back with the write
-        if (badObs.get("bad").asInstanceOf[Long] > 0L)
+        // both counts came back with the write, unless the optimizer
+        // proved the indexed plan empty (no filters and a null default
+        // level) and pruned the raw batch's observation with it
+        val nBad = badObs.get.getOrElse("bad", batch.where(isBad).count())
+        if (nBad.asInstanceOf[Long] > 0L)
           batch.where(isBad).withColumn("reject_reason",
               when(col("_corrupt").isNotNull, "malformed_json")
                 .otherwise("missing_path"))

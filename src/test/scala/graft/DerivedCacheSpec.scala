@@ -1,19 +1,24 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Focused specs for the two per-JVM amortization primitives the r12
-  * optimization round leans on: LayoutCache (parquet trees) and
-  * DerivedCache (driver-side learned artifacts). Both must compute a
-  * key exactly once per JVM, re-run after a failure, and fail fast on
-  * same-key re-entrancy instead of deadlocking.
+/** Focused specs for the per-JVM memo the r12 optimization round leans
+  * on: JvmMemo (one future per key) and LayoutCache's parquet trees and
+  * tables over it. A key must compute exactly once per JVM, re-run
+  * after a failure, and fail fast on same-key re-entrancy instead of
+  * deadlocking. (The suite keeps the name it had when the driver-side
+  * values lived in their own cache object.)
   */
 class DerivedCacheSpec extends AnyFunSuite {
 
   test("DerivedCache computes a key once and memoizes the value") {
     var runs = 0
     def get(): Seq[Int] =
-      DerivedCache.getOrCompute("spec_once", "/spec/dir") {
+      JvmMemo.getOrCompute("value", "spec_once", "/spec/dir") {
         runs += 1; Seq(1, 2, 3)
       }
     assert(get() == Seq(1, 2, 3))
@@ -24,7 +29,7 @@ class DerivedCacheSpec extends AnyFunSuite {
   test("DerivedCache keys include the dir — two dirs, two computes") {
     var runs = 0
     def get(d: String): Int =
-      DerivedCache.getOrCompute[Integer]("spec_dirs", d) { runs += 1; 7 }
+      JvmMemo.getOrCompute[Integer]("value", "spec_dirs", d) { runs += 1; 7 }
     get("/a"); get("/b"); get("/a")
     assert(runs == 2)
   }
@@ -32,7 +37,7 @@ class DerivedCacheSpec extends AnyFunSuite {
   test("DerivedCache: a failed compute is uncached, a retry re-runs") {
     var attempts = 0
     def get(fail: Boolean): Integer =
-      DerivedCache.getOrCompute[Integer]("spec_retry", "/d") {
+      JvmMemo.getOrCompute[Integer]("value", "spec_retry", "/d") {
         attempts += 1
         if (fail) throw new RuntimeException("boom")
         42
@@ -69,14 +74,14 @@ class DerivedCacheSpec extends AnyFunSuite {
   test("DerivedCache: same-key re-entrant getOrCompute fails fast " +
       "instead of deadlocking on its own future") {
     val e = intercept[IllegalStateException] {
-      DerivedCache.getOrCompute[Integer]("spec_dc_reentrant", "/d") {
-        DerivedCache.getOrCompute[Integer]("spec_dc_reentrant", "/d")(1)
+      JvmMemo.getOrCompute[Integer]("value", "spec_dc_reentrant", "/d") {
+        JvmMemo.getOrCompute[Integer]("value", "spec_dc_reentrant", "/d")(1)
       }
     }
     assert(e.getMessage.contains("re-entrant"))
     // the failed outer compute must be uncached: a retry runs
-    assert(DerivedCache.getOrCompute[Integer](
-      "spec_dc_reentrant", "/d")(9) == 9)
+    assert(JvmMemo.getOrCompute[Integer](
+      "value", "spec_dc_reentrant", "/d")(9) == 9)
   }
 
   test("LayoutCache: spark.graft.cacheRoot routes trees through the " +
@@ -109,5 +114,71 @@ class DerivedCacheSpec extends AnyFunSuite {
       val in = fs.open(p)
       assert(in.readUTF() == "ok"); in.close()
     } finally spark.conf.unset("spark.graft.cacheRoot")
+  }
+
+  test("JvmMemo: eight threads racing on one key compute once and all " +
+      "get the same value") {
+    val runs = new AtomicInteger()
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val futures = (1 to 8).map { _ =>
+        pool.submit(new Callable[AnyRef] {
+          def call(): AnyRef = {
+            start.await()
+            JvmMemo.getOrCompute("value", "spec_race", "/d") {
+              runs.incrementAndGet()
+              Thread.sleep(200) // hold the key while the others arrive
+              new Object
+            }
+          }
+        })
+      }
+      start.countDown()
+      val got = futures.map(_.get(60, TimeUnit.SECONDS))
+      assert(runs.get == 1, "the compute ran more than once under a race")
+      assert(got.forall(_ eq got.head), "threads got different values")
+    } finally pool.shutdownNow()
+  }
+
+  test("LayoutCache.table: a hit reads the bytes back without " +
+      "evaluating the plan") {
+    val spark = TestSpark.spark
+    var built = 0
+    def get() = LayoutCache.table("spec_table_hit", "/spec/dir") {
+      built += 1
+      spark.range(3).toDF("id")
+    }
+    assert(get().collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(get().collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(built == 1, "the by-name plan was evaluated on a hit")
+  }
+
+  test("LayoutCache.table: an empty plan reads back a typed, empty frame") {
+    val spark = TestSpark.spark
+    val t = LayoutCache.table("spec_table_empty", "/spec/dir") {
+      spark.range(5).where("id < 0")
+        .selectExpr("id", "cast(id AS string) AS s")
+    }
+    assert(t.schema.map(f => (f.name, f.dataType)) ==
+      Seq("id" -> LongType, "s" -> StringType))
+    assert(t.collect().isEmpty)
+  }
+
+  test("LayoutCache: getOrWrite after deleteAll runs the write again " +
+      "and returns a tree that exists") {
+    var writes = 0
+    def get(): String = LayoutCache.getOrWrite("spec_after_delete",
+        "/spec/dir") { tmp =>
+      writes += 1
+      Files.writeString(Paths.get(tmp, "marker"), "ok")
+    }
+    val first = get()
+    assert(get() == first && writes == 1)
+    LayoutCache.deleteAll()
+    assert(!Files.exists(Paths.get(first)))
+    val second = get()
+    assert(writes == 2, "deleteAll left a memo entry naming a deleted tree")
+    assert(Files.exists(Paths.get(second, "marker")))
   }
 }

@@ -31,11 +31,13 @@ class IndexRequestsSpec extends GraftSpec {
     val in: Path = Files.createDirectories(base.resolve("in"))
     def dir(name: String): String = base.resolve(name).toString
     /** Land `manifest` as `in/<name>` and drain it on the one checkpoint. */
-    def drain(name: String, manifest: String, uuid: String): StreamingQuery = {
+    def drain(name: String, manifest: String, uuid: String,
+        filters: Seq[IndexFilter] = Seq(IndexFilter("1", Seq("\\.csv$"))),
+        defaultLevel: String = "1"): StreamingQuery = {
       Files.writeString(in.resolve(name), manifest)
       val q = IncrementalIndexer.startWithProtocol(spark, in.toString,
         dir("catalog"), dir("rejected"), dir("events"), dir("chk"),
-        filters = Seq(IndexFilter("1", Seq("\\.csv$"))), generatedBy = uuid)
+        filters = filters, generatedBy = uuid, defaultLevel = defaultLevel)
       q.awaitTermination()
       q
     }
@@ -450,6 +452,19 @@ class IndexRequestsSpec extends GraftSpec {
       .map(r => (r.getString(0), r.getLong(1))).toSeq ==
       Seq(("state_exit", 0L)))
     assert(p.states("job-N") == Seq(("FINISHED", 0L, 1L)))
+  }
+
+  test("no filters and a null default level index nothing, still reject " +
+    "bad rows and hand off n_files = 0") {
+    val p = new Proto("graft_nulllevel")
+    p.drain("m1.jsonl",
+      """{"doc_id": 1, "path": "a/x.csv", "n_chars": 10}
+        |not json
+        |""".stripMargin, "job-V", filters = Nil, defaultLevel = null)
+    assert(spark.read.json(p.dir("rejected")).select("reject_reason")
+      .collect().map(_.getString(0)).toSeq == Seq("malformed_json"))
+    assert(!p.files("catalog").exists(_.toString.endsWith(".parquet")))
+    assert(p.states("job-V") == Seq(("FINISHED", 0L, 1L)))
   }
 
   test("event files land whole: no tmp leftovers, every visible file " +
