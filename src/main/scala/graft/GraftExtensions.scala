@@ -168,23 +168,20 @@ case class ApproxDistinctRewrite(session: SparkSession)
 
   private def enabled: Boolean =
     session.conf.get("spark.graft.approxCountDistinct", "false").toBoolean
-  private def sketchK: Int =
-    session.conf.get("spark.graft.approxCountDistinct.k", "256").toInt
+  /** Sketch size: ±1/√256 ≈ 6% standard error, 2 KiB per group. */
+  private val k = 256
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan
-    else {
-      val k = sketchK
-      plan transformUp {
-        case agg: Aggregate => agg.transformExpressions {
-          case ae @ AggregateExpression(Count(children), _, true, None, _)
-              if children.size == 1 =>
-            Cast(
-              graft.functions.KmvSketch(
-                CreateArray(Seq(XxHash64(children, 42L))), k)
-                .toAggregateExpression(),
-              LongType)
-        }
+    else plan transformUp {
+      case agg: Aggregate => agg.transformExpressions {
+        case ae @ AggregateExpression(Count(children), _, true, None, _)
+            if children.size == 1 =>
+          Cast(
+            graft.functions.KmvSketch(
+              CreateArray(Seq(XxHash64(children, 42L))), k)
+              .toAggregateExpression(),
+            LongType)
       }
     }
 }

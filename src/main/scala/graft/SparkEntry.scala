@@ -6,73 +6,50 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every operator module contributes a `queries` map (name -> plan
   * builder) and an `oracles` map (name -> DuckDB SQL); this object just
-  * concatenates them. Keys are the SURVEY.md §2 inventory names.
+  * concatenates them. Keys are the SURVEY.md §2 inventory names, and no
+  * two modules share one (QueriesSpec checks it).
   */
 object SparkEntry {
 
-  private def modules = Seq(
-    operators.Catalog.queries,
-    operators.Relational.queries,
-    operators.Temporal.queries,
-    operators.SemiStructured.queries,
-    operators.TextAnalysis.queries,
-    operators.Dedup.queries,
-    operators.Similarity.queries,
-    operators.Multimodal.queries,
-    operators.Extensions.queries,
-    operators.Corpus.queries,
-    operators.Quality.queries,
-    operators.Change.queries,
-    operators.Graph.queries,
-    operators.Subqueries.queries,
-    operators.Analytics.queries,
-    operators.Advanced.queries,
-    operators.Frontier.queries,
-    operators.Curation.queries,
-    operators.Horizon.queries,
-    operators.Meridian.queries,
-    operators.Zenith.queries,
-    operators.Pinnacle.queries,
-    operators.Summit.queries,
-    operators.Apex.queries,
-    operators.Crest.queries,
-    operators.Keystone.queries,
-    operators.Lattice.queries,
-    operators.Aegis.queries,
-    operators.Forge.queries,
-  )
-
-  private def oracleModules = Seq(
-    operators.Catalog.oracles,
-    operators.Relational.oracles,
-    operators.Temporal.oracles,
-    operators.SemiStructured.oracles,
-    operators.TextAnalysis.oracles,
-    operators.Dedup.oracles,
-    operators.Similarity.oracles,
-    operators.Multimodal.oracles,
-    operators.Extensions.oracles,
-    operators.Corpus.oracles,
-    operators.Quality.oracles,
-    operators.Change.oracles,
-    operators.Graph.oracles,
-    operators.Subqueries.oracles,
-    operators.Analytics.oracles,
-    operators.Advanced.oracles,
-    operators.Frontier.oracles,
-    operators.Curation.oracles,
-    operators.Horizon.oracles,
-    operators.Meridian.oracles,
-    operators.Zenith.oracles,
-    operators.Pinnacle.oracles,
-    operators.Summit.oracles,
-    operators.Apex.oracles,
-    operators.Crest.oracles,
-    operators.Keystone.oracles,
-    operators.Lattice.oracles,
-    operators.Aegis.oracles,
-    operators.Forge.oracles,
-  )
+  /** Every operator module's `(queries, oracles)` pair, in one list so
+    * a module cannot be registered for plans but forgotten for oracles.
+    */
+  private[graft] def modules: Seq[(
+      Map[String, (SparkSession, String) => DataFrame],
+      Map[String, String])] = {
+    import operators._
+    Seq(
+      (Catalog.queries, Catalog.oracles),
+      (Relational.queries, Relational.oracles),
+      (Temporal.queries, Temporal.oracles),
+      (SemiStructured.queries, SemiStructured.oracles),
+      (TextAnalysis.queries, TextAnalysis.oracles),
+      (Dedup.queries, Dedup.oracles),
+      (Similarity.queries, Similarity.oracles),
+      (Multimodal.queries, Multimodal.oracles),
+      (Extensions.queries, Extensions.oracles),
+      (Corpus.queries, Corpus.oracles),
+      (Quality.queries, Quality.oracles),
+      (Change.queries, Change.oracles),
+      (Graph.queries, Graph.oracles),
+      (Subqueries.queries, Subqueries.oracles),
+      (Analytics.queries, Analytics.oracles),
+      (Advanced.queries, Advanced.oracles),
+      (Frontier.queries, Frontier.oracles),
+      (Curation.queries, Curation.oracles),
+      (Horizon.queries, Horizon.oracles),
+      (Meridian.queries, Meridian.oracles),
+      (Zenith.queries, Zenith.oracles),
+      (Pinnacle.queries, Pinnacle.oracles),
+      (Summit.queries, Summit.oracles),
+      (Apex.queries, Apex.oracles),
+      (Crest.queries, Crest.oracles),
+      (Keystone.queries, Keystone.oracles),
+      (Lattice.queries, Lattice.oracles),
+      (Aegis.queries, Aegis.oracles),
+      (Forge.queries, Forge.oracles),
+    )
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -80,10 +57,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.reduce(_ ++ _)
+    modules.map(_._1).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    oracleModules.reduce(_ ++ _)
+    modules.map(_._2).reduce(_ ++ _)
 }

@@ -45,11 +45,6 @@ object Tables {
     else df.repartition(spark.sparkContext.defaultParallelism)
   }
 
-
-  /** Register every table as a temp view for spark.sql(...) use. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-
   /** Bounded persist slots for operators that cache a shared subplan
     * (the link-prediction edge list, the phash signature table). The
     * result DataFrame is lazy, so the operator can't unpersist before
@@ -123,7 +118,7 @@ object Tables {
     * measurably won) — so the 100× win engages without operator
     * action while bench-scale plans keep the idle shape. Every
     * profile is result-identical (GraphSaturatedSpec pins it);
-    * AuxBench carries the per-side A/B numbers.
+    * PLANS.md rounds 14 and 19 carry the per-side A/B numbers.
     */
   def saturatedSlot(slot: String, df: DataFrame, dir: String): DataFrame = {
     val conf = df.sparkSession.conf
@@ -171,27 +166,6 @@ object Tables {
         <= BigInt(limitBytes))
       broadcast(df)
     else df
-  }
-
-  /** Accurate-size broadcast gate for DERIVED attach tables whose
-    * payload is projected text or built-up arrays. Catalyst's
-    * `sizeInBytes` propagates through projections using DEFAULT field
-    * widths — 20 bytes per string, ONE element per array — so a
-    * shingle-set / signature / full-text attach side is underestimated
-    * 100-1000×, and [[maybeBroadcast]]'s static gate stays open on a
-    * table that is really gigabytes: measured at the 100× replica,
-    * where dedup_banding_sweep's signature attach OOM'd the driver
-    * building a "26 MB" broadcast that actually held ~4 GB of shingle
-    * arrays. This gate closes that blind spot by MEASURING: persist
-    * the side into a bounded [[persistSlot]], materialize it (callers
-    * reuse the cache, so the pass is the operator's own compute, not
-    * overhead), and gate on the InMemoryRelation's
-    * post-materialization byte count — the actual size.
-    */
-  def measuredBroadcast(slot: String, df: DataFrame): DataFrame = {
-    val cached = persistSlot(slot, df)
-    cached.count() // materialize: stats become the real cached bytes
-    maybeBroadcast(cached)
   }
 
   /** `events` with ts canonicalized to epoch MICROSECONDS (`ts_us`).

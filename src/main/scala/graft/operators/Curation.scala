@@ -495,22 +495,12 @@ object Curation {
       rounds: Int): DataFrame =
     graphKcoreOn(symmetricEdges(spark, dir), k, rounds)
 
-  /** A/B variant: the symmetric edge list in a bounded persist slot.
-    * The unrolled 3-round plan references the edge subtree 3^rounds =
-    * 27 times — well past the 4-7× duplication where the r5 A/B found
-    * recompute-in-parallel beating a persist barrier on an idle box.
-    * AuxBench measures both; PLANS.md records the verdict.
-    */
-  def graphKcorePersist(spark: SparkSession, dir: String): DataFrame =
-    graphKcoreOn(
-      Tables.persistSlot("graph_kcore_edges", symmetricEdges(spark, dir)),
-      k = 3, rounds = 3)
-
   private def symmetricEdges(spark: SparkSession, dir: String): DataFrame = {
     val und = Graph.undirected(spark, dir)
-    // the 27-ref kcore subtree: saturated clusters also persist the
-    // doubled arc list (the graph_kcore_persist A/B shape), idle boxes
-    // recompute it in parallel (measured 1.6× faster — PLANS.md)
+    // the unrolled 3-round plan references this subtree 3^rounds = 27
+    // times: saturated clusters persist the doubled arc list, idle
+    // boxes recompute it in parallel (measured 1.6× faster — PLANS.md
+    // rounds 14 and 19)
     Tables.saturatedSlot("graph_kcore_edges",
       und.select(col("pa").as("src"), col("pb").as("dst"))
         .union(und.select(col("pb").as("src"), col("pa").as("dst"))),

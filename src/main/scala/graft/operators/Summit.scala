@@ -438,26 +438,17 @@ object Summit {
     annGraphSearch(spark, dir, bits = 6, kGraph = 8, beam = 8,
       hops = 3, k = 3)
 
-  /** The production scale dial (AuxBench `ann_graph_search_auto`, the
-    * `dedup_embedding_auto` pattern): bucket bits from log₂(n) so
-    * bucket occupancy — and with it the O(n²/2^bits) graph-build
-    * self-join — stays ~`targetOccupancy` at any corpus size: total
-    * build cost ≈ n·occupancy cosine evaluations, LINEAR in n. The
-    * registered eval query pins bits=6 because the DuckDB oracle
-    * interpolates a STATIC bit count; measured at the 30× replica the
-    * fixed-6-bit build is the whole cost (70.3 s vs 19.3 s auto at
-    * occupancy 256). Smaller buckets trade candidate recall exactly
-    * like #71 — production patches with multi-probe or a second hash
-    * table, not wider buckets.
+  /** The production scale dial: size the bucket bits from the corpus
+    * as `bits = max(6, ⌈log₂(n/occupancy)⌉)` so bucket occupancy — and
+    * with it the O(n²/2^bits) graph-build self-join — stays at
+    * ~occupancy (256 measured well) at any corpus size: total build
+    * cost ≈ n·occupancy cosine evaluations, LINEAR in n. The registered eval query pins bits=6 because the
+    * DuckDB oracle interpolates a STATIC bit count; measured at the 30×
+    * replica the fixed-6-bit build is the whole cost (70.3 s vs 19.3 s
+    * with the sized bits at occupancy 256). Smaller buckets trade
+    * candidate recall exactly like #71 — production patches with
+    * multi-probe or a second hash table, not wider buckets.
     */
-  def annGraphSearchAuto(spark: SparkSession, dir: String,
-      targetOccupancy: Int = 256): DataFrame = {
-    val n = Tables(spark, dir, "embeddings").count()
-    val bits = math.max(6, math.ceil(
-      math.log(n.toDouble / targetOccupancy) / math.log(2)).toInt)
-    annGraphSearch(spark, dir, bits, kGraph = 8, beam = 8, hops = 3, k = 3)
-  }
-
   def annGraphSearch(spark: SparkSession, dir: String, bits: Int,
       kGraph: Int, beam: Int, hops: Int, k: Int): DataFrame = {
     val v = Tables.persistSlot("summit.graphSearch.v",

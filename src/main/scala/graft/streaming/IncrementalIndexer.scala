@@ -13,12 +13,12 @@ import graft.catalog.FileIndexer.IndexFilter
   * and level-assigned, and matching records append to the partitioned
   * parquet catalog — i.e. `reactor.py`'s message-driven indexing
   * (`/root/reference/reactor.py:147-218`) re-expressed as a Structured
-  * Streaming job with exactly-once file-sink semantics.
+  * Streaming job, [[startWithProtocol]].
   *
   * Scale: the stream is stateless (pure filter+project per batch), so
-  * no state store grows; the sink partitions by processing_level the
-  * same way the batch writer does; checkpointing makes restart
-  * exactly-once over input files.
+  * no state store grows; the catalog write partitions by
+  * processing_level the same way the batch writer does; checkpointing
+  * makes restart exactly-once over input files.
   */
 object IncrementalIndexer {
 
@@ -83,25 +83,6 @@ object IncrementalIndexer {
         count(lit(1)).as("n_batches"))
       .select(col("uuid"), lit("FINISHED").as("job_state"),
         col("n_files"), col("n_batches"))
-
-  /** Start indexing manifests arriving in `inDir` into the parquet
-    * catalog at `outDir`.
-    */
-  def start(spark: SparkSession, inDir: String, outDir: String,
-      checkpointDir: String, filters: Seq[IndexFilter],
-      generatedBy: String): StreamingQuery = {
-    val manifests = spark.readStream
-      .schema(manifestSchema)
-      .json(inDir)
-    val indexed = FileIndexer.index(manifests, "path", filters, generatedBy)
-    indexed.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("processing_level")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** The full reference protocol as one streaming job: validate each
     * manifest row, dead-letter the malformed ones, index the good ones,

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.catalog.FileIndexer.IndexFilter
 import graft.streaming.IncrementalIndexer
 
-/** End-to-end incremental indexing: manifests arriving in waves are
-  * filtered, level-assigned, and appended to the partitioned catalog —
-  * with no reprocessing of already-indexed files across restarts
-  * (checkpointed file source).
+/** End-to-end incremental indexing through `startWithProtocol`:
+  * manifests arriving in waves are filtered, level-assigned, and
+  * appended to the partitioned catalog — with no reprocessing of
+  * already-indexed files across restarts (checkpointed file source).
   */
 class IncrementalIndexerSpec extends GraftSpec {
 
@@ -20,12 +20,14 @@ class IncrementalIndexerSpec extends GraftSpec {
     val base = Files.createTempDirectory("graft_stream")
     val in = base.resolve("in"); Files.createDirectories(in)
     val out = base.resolve("catalog").toString
+    val rejected = base.resolve("rejected").toString
+    val events = base.resolve("events").toString
     val chk = base.resolve("chk").toString
 
     def runWave(name: String, lines: String): Unit = {
       Files.writeString(in.resolve(name), lines)
-      val q = IncrementalIndexer.start(spark, in.toString, out, chk,
-        filters, generatedBy = "job-A")
+      val q = IncrementalIndexer.startWithProtocol(spark, in.toString, out,
+        rejected, events, chk, filters, generatedBy = "job-A")
       q.awaitTermination()
     }
 
@@ -46,5 +48,10 @@ class IncrementalIndexerSpec extends GraftSpec {
     assert(afterW2.count() == 3)
     assert(afterW2.agg(sum("doc_id")).head.getLong(0) == 1 + 3 + 4)
     assert(afterW2.columns.contains("generated_by"))
+    // one `indexed` handshake per wave: 2 + 1 files over two batches
+    val states = IncrementalIndexer.jobStates(spark.read.json(events))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getLong(3)))
+    assert(states.toSeq == Seq(("job-A", "FINISHED", 3L, 2L)))
   }
 }

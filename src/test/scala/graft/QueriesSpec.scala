@@ -11,6 +11,18 @@ class QueriesSpec extends GraftSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("per-module query and oracle key sets are pairwise disjoint") {
+    // a key in two modules would let the later one silently replace
+    // the earlier one's plan and oracle in the concatenated maps
+    def shared(keySets: Seq[Set[String]]): Set[String] =
+      keySets.flatten.groupBy(identity).collect {
+        case (k, hits) if hits.size > 1 => k }.toSet
+    val modules = SparkEntry.modules
+    assert(shared(modules.map(_._1.keySet)).isEmpty)
+    assert(shared(modules.map(_._2.keySet)).isEmpty)
+    assert(modules.map(_._1.size).sum == SparkEntry.queries.size)
+  }
+
   test("entry smoke query returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
