@@ -368,17 +368,11 @@ object Corpus {
     * stream is materialized exactly once; no self-join, no flag-back
     * join, everything linear in total passage count.
     */
-  def dedupPassages(spark: SparkSession, dir: String,
-      passageTokens: Int = 8): DataFrame = {
+  def dedupPassages(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.spread(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
-      // NB sequence(1, 0) DESCENDS in Spark — guard the <1-passage case
-      .select(col("doc_id"), explode(expr(
-        s"""CASE WHEN size(toks) >= $passageTokens THEN
-           |  transform(sequence(1, size(toks) div $passageTokens),
-           |    i -> md5(concat_ws(' ',
-           |      slice(toks, (i - 1) * $passageTokens + 1, $passageTokens))))
-           |ELSE array() END""".stripMargin)).as("ph"))
+      .select(col("doc_id"),
+        explode(Signatures.passageHashes(col("toks"), 8)).as("ph"))
     val perDoc = p.groupBy("ph", "doc_id").agg(count(lit(1)).as("cnt"))
     // docs co-resident on the hash, counted in-place by a window — a
     // passage is shared iff >= 2 distinct docs carry its hash
@@ -434,16 +428,14 @@ object Corpus {
     * No self-join, no all-pairs — same shape that lets MinHash LSH
     * scale, applied at substring granularity.
     */
-  def dedupSubstrings(spark: SparkSession, dir: String,
-      window: Int = 8): DataFrame =
-    dedupSubstringsDocs(Tables.spread(spark, dir, "documents"), window)
+  def dedupSubstrings(spark: SparkSession, dir: String): DataFrame =
+    dedupSubstringsDocs(Tables.spread(spark, dir, "documents"))
 
   /** Core of #160 over an arbitrary `(doc_id, text)` table (spec entry
     * point: plant an unaligned duplicated span, prove #68 misses it).
     */
-  private[operators] def dedupSubstringsDocs(docs: DataFrame,
-      window: Int): DataFrame = {
-    val w = window
+  private[operators] def dedupSubstringsDocs(docs: DataFrame): DataFrame = {
+    val w = 8
     // every overlapping w-token window, hashed; docs shorter than w
     // tokens carry no window and drop out (mirrors #68's chunk rule)
     val s = docs
@@ -847,10 +839,8 @@ object Corpus {
       .localCheckpoint(true)
     val perIter = (1 to iterations).map { it =>
       val ranked = vocab
-        .select(col("cw"), explode(expr(
-          """transform(sequence(1, size(syms) - 1),
-            |  i -> concat_ws(' ', slice(syms, i, 2)))""".stripMargin))
-          .as("pair"))
+        .select(col("cw"),
+          explode(Signatures.wordShingles(col("syms"), 2)).as("pair"))
         .groupBy("pair").agg(sum("cw").as("n_occurrences"))
         .withColumn("rk", row_number().over(
           Window.orderBy(desc("n_occurrences"), col("pair"))))
@@ -974,13 +964,9 @@ object Corpus {
     var it = 0
     while (it < nMerges && !exhausted) {
       it += 1
-      // size guard: a fully-merged word (1 symbol) must not reach
-      // sequence(1, 0), which Spark renders DESCENDING, not empty
       val top = vocab.where(size(col("syms")) >= 2)
-        .select(col("cw"), explode(expr(
-          """transform(sequence(1, size(syms) - 1),
-            |  i -> concat_ws(' ', slice(syms, i, 2)))""".stripMargin))
-          .as("pair"))
+        .select(col("cw"),
+          explode(Signatures.wordShingles(col("syms"), 2)).as("pair"))
         .groupBy("pair").agg(sum("cw").as("n"))
         .orderBy(desc("n"), col("pair"))
         .limit(1).collect()

@@ -53,10 +53,8 @@ object Crest {
     val sh = Tables.spread(spark, dir, "documents")
       .select(col("source"), split(col("text"), " ").as("toks"))
       .where(size(col("toks")) >= 3)
-      .select(col("source"), explode(expr(
-        """transform(sequence(0, size(toks) - 3),
-          |  i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"""
-          .stripMargin)).as("shingle"))
+      .select(col("source"),
+        explode(Signatures.wordShingles(col("toks"), 3)).as("shingle"))
     val estRaw =
       expr(s"${graft.functions.HllSketch.estNumSql} / cast(s as double)")
     sh.groupBy("source")

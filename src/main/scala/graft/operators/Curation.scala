@@ -564,11 +564,7 @@ object Curation {
     val bigrams = docs
       .select(split(col("text"), " ").as("toks"))
       .where(size(col("toks")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1,
-          |              element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("bg"))
+      .select(explode(Signatures.wordPairs(col("toks"))).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     val c12 = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))

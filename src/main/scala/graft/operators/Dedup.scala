@@ -108,20 +108,10 @@ object Dedup {
     val banded = grams
       .withColumn("sig",
         expr(s"minhash_sig_from_hashes($gramCol, $numHashes)"))
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(0, ${numHashes / bandRows - 1}),
-           |  b -> named_struct(
-           |    'band', b,
-           |    'bsig', md5(concat_ws(',', slice(sig, b * $bandRows + 1,
-           |      $bandRows)))))""".stripMargin)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"),
-        col("bb.bsig").as("bsig"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+      .select(col("doc_id"), explode(Signatures.md5Bands(col("sig"),
+        numHashes / bandRows, bandRows)).as("bb"))
+      .select(col("doc_id"), col("bb.*"))
+    Signatures.bucketPairs(banded, "doc_id")
   }
 
   // ---------------------------------------------------------------- #28
@@ -216,26 +206,14 @@ object Dedup {
     require(64 % bands == 0, s"bands must divide 64, got $bands")
     require(bands > maxHamming,
       s"pigeonhole cover needs bands > maxHamming ($bands <= $maxHamming)")
-    val bits = 64 / bands
-    val mask = if (bits == 64) -1L else (1L << bits) - 1
     val base = Tables.spread(spark, dir, "documents")
       .withColumn("sig", expr("simhash_md5(split(text, ' '), 2)"))
       .select("doc_id", "sig")
     val banded = base.select(col("doc_id"), col("sig"),
-      explode(expr(
-        s"""transform(sequence(0, ${bands - 1}), b -> named_struct(
-           |  'band', b,
-           |  'bval', shiftright(sig, b * $bits) & $mask))""".stripMargin))
-        .as("bb"))
-      .select(col("doc_id"), col("sig"), col("bb.band").as("band"),
-        col("bb.bval").as("bval"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+        explode(Signatures.bitBands(col("sig"), bands, 64 / bands)).as("bb"))
+      .select(col("doc_id"), col("sig"), col("bb.*"))
+    Signatures.bucketPairs(banded, "doc_id",
         expr("cast(bit_count(a.sig ^ b.sig) as long)").as("hamming"))
-      .distinct()
       .where(col("hamming") <= maxHamming)
       .orderBy("id_a", "id_b")
   }
@@ -252,11 +230,7 @@ object Dedup {
     * quadratically), LSH bucket occupancy tracks the true duplicate
     * density, so candidates stay ~linear at any scale.
     */
-  def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    dedupNgramJaccard(spark, dir, numHashes = 16, bandRows = 2)
-
-  def dedupNgramJaccard(spark: SparkSession, dir: String, numHashes: Int,
-      bandRows: Int): DataFrame = {
+  def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     // persisted + MATERIALIZED (count) so (a) the gram compute runs
     // once across candidates + both attaches and (b) the attach gates
     // below read the ACTUAL cached bytes — Catalyst's default-width
@@ -268,7 +242,7 @@ object Dedup {
         .withColumn("grams", expr("ngram_hashes(split(text, ' '), 2)"))
         .select("doc_id", "grams"))
     g.count()
-    val pairs = lshCandidates(g, "grams", numHashes, bandRows)
+    val pairs = lshCandidates(g, "grams", numHashes = 16, bandRows = 2)
     // The gram table grows with the corpus, so the attach-side hint is
     // size-gated (Tables.maybeBroadcast): broadcast-hash at bench scale,
     // shuffle joins on doc_id past the gate (grams stay narrow either
@@ -349,20 +323,10 @@ object Dedup {
     val v = Tables.spread(spark, dir, "embeddings")
       .withColumn("sig", expr(s"md5_rhp_bucket(embedding, ${bands * bits})"))
       .select("vec_id", "embedding", "sig")
-    val banded = v.select(col("vec_id"), explode(expr(
-        s"""transform(sequence(0, ${bands - 1}), b -> named_struct(
-           |  'band', b,
-           |  'bval', shiftright(sig, b * $bits) & ${(1 << bits) - 1}))"""
-          .stripMargin)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"),
-        col("bb.bval").as("bval"))
-    val pairs = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    pairs
+    val banded = v.select(col("vec_id"),
+        explode(Signatures.bitBands(col("sig"), bands, bits)).as("bb"))
+      .select(col("vec_id"), col("bb.*"))
+    Signatures.bucketPairs(banded, "vec_id")
       .join(v.select(col("vec_id").as("id_a"), col("embedding").as("e_a")),
         "id_a")
       .join(v.select(col("vec_id").as("id_b"), col("embedding").as("e_b")),
@@ -440,32 +404,21 @@ object Dedup {
     *
     * Scale: the passage explode is one corpus pass; per-hash pair
     * fan-out is bounded by the STOP-PASSAGE cap (hashes carried by
-    * > maxDf docs are dropped before pairing — ultra-common boilerplate
+    * > 100 docs are dropped before pairing — ultra-common boilerplate
     * passages would otherwise go quadratic, and a passage in hundreds
     * of docs identifies a template, not a containment pair). The gram
     * attach joins broadcast at bench scale and fall back to shuffle
     * joins on doc_id at cluster scale, same as #30.
     */
-  def dedupContainment(spark: SparkSession, dir: String): DataFrame =
-    dedupContainment(spark, dir, passageTokens = 8, maxDf = 100,
-      threshold = 0.9)
-
-  def dedupContainment(spark: SparkSession, dir: String, passageTokens: Int,
-      maxDf: Int, threshold: Double): DataFrame = {
+  def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
       .withColumn("grams", expr("ngram_hashes(toks, 2)"))
-    val p = docs.select(col("doc_id"), explode(expr(
-        s"""CASE WHEN size(toks) >= $passageTokens THEN
-           |  array_distinct(transform(
-           |    sequence(1, size(toks) div $passageTokens),
-           |    i -> md5(concat_ws(' ',
-           |      slice(toks, (i - 1) * $passageTokens + 1, $passageTokens)))))
-           |ELSE array() END""".stripMargin)).as("ph"))
-    val capped = p.withColumn("df",
-        count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("ph")))
-      .where(col("df") <= maxDf)
+    val p = docs.select(col("doc_id"), explode(array_distinct(
+      Signatures.passageHashes(col("toks"), 8))).as("ph"))
+    val capped = p
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("ph")))
+      .where(col("df") <= 100)
     val cand = capped.as("a")
       .join(capped.as("b"),
         col("a.ph") === col("b.ph") && col("a.doc_id") < col("b.doc_id"))
@@ -486,7 +439,7 @@ object Dedup {
       .withColumn("inter", expr("cast(intersect_count(g_a, g_b) as double)"))
       .withColumn("containment",
         r4(col("inter") / least(size(col("g_a")), size(col("g_b")))))
-      .where(col("containment") >= threshold)
+      .where(col("containment") >= 0.9)
       .withColumn("contained_id",
         when(size(col("g_a")) <= size(col("g_b")), col("id_a"))
           .otherwise(col("id_b")))
@@ -494,8 +447,9 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** Oracle: same candidate rule (shared <=maxDf passage hash) and the
-    * exact bigram containment, brute-forced over the candidate pairs.
+  /** Oracle: same candidate rule (a shared passage hash carried by
+    * <= 100 docs) and the exact bigram containment, brute-forced over
+    * the candidate pairs.
     */
   val dedupContainmentSql: String =
     """WITH p0 AS (
@@ -539,12 +493,8 @@ object Dedup {
     * the threshold (sim ≥ t ⇒ min/max ≥ t, since lev ≥ |len diff|) and
     * prunes DP work without changing the output.
     */
-  def dedupLevenshtein(spark: SparkSession, dir: String): DataFrame =
-    dedupLevenshtein(spark, dir, numHashes = 16, bandRows = 2,
-      threshold = 0.8)
-
-  def dedupLevenshtein(spark: SparkSession, dir: String, numHashes: Int,
-      bandRows: Int, threshold: Double): DataFrame = {
+  def dedupLevenshtein(spark: SparkSession, dir: String): DataFrame = {
+    val threshold = 0.8
     // persisted + materialized: the gram compute is shared between
     // candidates and attaches, and the text-attach gates below read
     // ACTUAL cached bytes — default-width stats count a full document
@@ -557,7 +507,7 @@ object Dedup {
         .select("doc_id", "text", "grams"))
     d.count()
     val pairs = lshCandidates(d.select("doc_id", "grams"), "grams",
-      numHashes, bandRows)
+      numHashes = 16, bandRows = 2)
     val t = d.select(col("doc_id"), col("text"))
     // length-band pruning BEFORE the text attach (r12 verdict task #6,
     // guide §2.3 — shuffle/attach a lightweight proxy, not the

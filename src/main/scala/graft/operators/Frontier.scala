@@ -83,11 +83,8 @@ object Frontier {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
     val bigrams = toks
       .where(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1,
-          |              element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("b"))
+      .select(col("doc_id"),
+        explode(Signatures.wordPairs(col("toks"))).as("b"))
       .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
     val lm = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       .withColumn("c1", sum(col("c12")).over(Window.partitionBy("w1")))
@@ -209,11 +206,8 @@ object Frontier {
     val bigrams = docs
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("toks"))
       .where(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("lang"), explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1,
-          |              element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("b"))
+      .select(col("doc_id"), col("lang"),
+        explode(Signatures.wordPairs(col("toks"))).as("b"))
       .select(col("doc_id"), col("lang"),
         col("b.w1").as("w1"), col("b.w2").as("w2"))
     val rawLm = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("r12"))

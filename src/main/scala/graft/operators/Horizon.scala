@@ -235,10 +235,7 @@ object Horizon {
         size(col("toks")).cast("long").as("n_tokens"),
         size(array_distinct(col("toks"))).cast("long").as("n_distinct"),
         (size(col("toks")) - 1).cast("long").as("n_bigrams"),
-        size(array_distinct(expr(
-          """transform(sequence(1, size(toks) - 1),
-            |  i -> concat(element_at(toks, i), ' ',
-            |              element_at(toks, i + 1)))""".stripMargin)))
+        size(array_distinct(Signatures.wordShingles(col("toks"), 2)))
           .cast("long").as("n_distinct_bg"))
       .withColumn("div_ratio",
         col("n_distinct").cast("double") / col("n_tokens"))
@@ -473,33 +470,12 @@ object Horizon {
     val sh = Tables.spread(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("t"))
       .where(size(col("t")) >= 3)
-      .select(col("doc_id"), expr(
-        """array_distinct(transform(sequence(1, size(t) - 2),
-          |  i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1),
-          |                 element_at(t, i + 2))))""".stripMargin).as("sh"))
+      .select(col("doc_id"),
+        array_distinct(Signatures.wordShingles(col("t"), 3)).as("sh"))
     sh.withColumn("sig", expr(
       """transform(sequence(0, 15),
         |  k -> array_min(transform(sh,
         |    g -> md5(concat(cast(k as string), ':', g)))))""".stripMargin))
-  }
-
-  /** Shared by #179/#188: the 4×4-banded candidate pairs of
-    * [[portableSig]] (id_a < id_b, distinct).
-    */
-  private def portableCandidates(sig: DataFrame): DataFrame = {
-    val banded = sig.select(col("doc_id"), explode(expr(
-        """transform(sequence(0, 3),
-          |  b -> named_struct('band', b,
-          |    'bsig', md5(concat_ws(',', slice(sig, b * 4 + 1, 4)))))"""
-          .stripMargin)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"),
-        col("bb.bsig").as("bsig"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
   }
 
   /** Oracle building block for the 16-coord md5-portable signature:
@@ -519,7 +495,8 @@ object Horizon {
       |  FROM sh)""".stripMargin
 
   /** Oracle building block shared by #179/#188: [[portableSigSqlCtes]]
-    * plus the 4×4 `banded`/`pairs` CTEs of [[portableCandidates]].
+    * plus the 4×4 `banded`/`pairs` CTEs of the candidates in
+    * [[portableScoredCached]].
     */
   private val portableCandidatesSqlCtes: String =
     s"""$portableSigSqlCtes,
@@ -554,9 +531,9 @@ object Horizon {
     LayoutCache.table("portable_sig", dir)(portableSig(spark, dir))
 
   /** The SCORED default-banding candidates — (id_a, id_b, agree,
-    * inter, uni) over [[portableCandidates]] of the cached signature
-    * table — materialized once per (dir) per JVM (r12). This is the
-    * exact shared subplan the r11 verdict's task #1 named: #188
+    * inter, uni) over the 4×4 [[Signatures.md5Bands]] bucket pairs of
+    * the cached signature table — materialized once per (dir) per JVM
+    * (r12). This is the exact shared subplan the r11 verdict's task #1 named: #188
     * consumes it through THREE downstream branches (two unions + a
     * join) and #179 through one, so before r12 the banding join and
     * both array-side attaches could re-run per branch. The table is
@@ -568,7 +545,10 @@ object Horizon {
     LayoutCache.table("portable_scored", dir) {
       val sig = portableSigCached(spark, dir)
       val side = sig.select(col("doc_id"), col("sh"), col("sig"))
-      portableCandidates(sig)
+      val banded = sig.select(col("doc_id"),
+          explode(Signatures.md5Bands(col("sig"), 4, 4)).as("bb"))
+        .select(col("doc_id"), col("bb.*"))
+      Signatures.bucketPairs(banded, "doc_id")
         .join(Tables.maybeBroadcast(side.toDF("id_a", "sh_a", "sig_a")), "id_a")
         .join(Tables.maybeBroadcast(side.toDF("id_b", "sh_b", "sig_b")), "id_b")
         .withColumn("agree", expr(

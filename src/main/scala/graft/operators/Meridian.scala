@@ -152,11 +152,7 @@ object Meridian {
     val big = Tables.spread(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
       .where(size(col("toks")) >= 2)
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1,
-          |              element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("b"))
+      .select(explode(Signatures.wordPairs(col("toks"))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val wc = Window.partitionBy("w1")
@@ -1347,16 +1343,10 @@ object Meridian {
     * the rollup is |sources| rows.
     */
   def textBoilerplate(spark: SparkSession, dir: String): DataFrame = {
-    val pt = 8
     val p = Tables.spread(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
-      // sequence(1, 0) DESCENDS in Spark — guard the <1-chunk case
-      .select(col("source"), col("doc_id"), explode(expr(
-        s"""CASE WHEN size(toks) >= $pt THEN
-           |  transform(sequence(1, size(toks) div $pt),
-           |    i -> md5(concat_ws(' ',
-           |      slice(toks, (i - 1) * $pt + 1, $pt))))
-           |ELSE array() END""".stripMargin)).as("ph"))
+      .select(col("source"), col("doc_id"),
+        explode(Signatures.passageHashes(col("toks"), 8)).as("ph"))
     val perDoc = p.groupBy("source", "ph", "doc_id")
       .agg(count(lit(1)).as("cnt"))
     val wPh = Window.partitionBy("source", "ph")

@@ -432,8 +432,6 @@ object Multimodal {
   def mmPhashDedup(spark: SparkSession, dir: String,
       bands: Int = 4, maxHamming: Int = 3): DataFrame = {
     require(64 % bands == 0 && bands > maxHamming)
-    val bits = 64 / bands
-    val mask = if (bits == 64) -1L else (1L << bits) - 1
     val docs = graft.Tables.spread(spark, dir, "documents")
       .select("doc_id", "text")
     // planted ids at +10^12 — disjoint from organic doc_ids by
@@ -449,20 +447,10 @@ object Multimodal {
       docs.union(reuploads)
         .select(col("doc_id"), expr("phash64(text)").as("sig")))
     val banded = base.select(col("doc_id"), col("sig"),
-      explode(expr(
-        s"""transform(sequence(0, ${bands - 1}), b -> named_struct(
-           |  'band', b,
-           |  'bval', shiftright(sig, b * $bits) & $mask))""".stripMargin))
-        .as("bb"))
-      .select(col("doc_id"), col("sig"), col("bb.band").as("band"),
-        col("bb.bval").as("bval"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+        explode(Signatures.bitBands(col("sig"), bands, 64 / bands)).as("bb"))
+      .select(col("doc_id"), col("sig"), col("bb.*"))
+    Signatures.bucketPairs(banded, "doc_id",
         expr("cast(bit_count(a.sig ^ b.sig) as long)").as("hamming"))
-      .distinct()
       .where(col("hamming") <= maxHamming)
       .orderBy("id_a", "id_b")
   }

@@ -204,10 +204,7 @@ object TextAnalysis {
   def textNgrams(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))
-          |""".stripMargin)).as("bigram"))
+      .select(explode(Signatures.wordShingles(col("toks"), 2)).as("bigram"))
       .groupBy("bigram")
       .agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), col("bigram"))
@@ -325,11 +322,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val big = Tables(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
-      .select(explode(expr(
-        """transform(sequence(1, size(toks) - 1),
-          |  i -> struct(element_at(toks, i) AS w1,
-          |              element_at(toks, i + 1) AS w2))""".stripMargin))
-        .as("b"))
+      .select(explode(Signatures.wordPairs(col("toks"))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy("w1", "w2")
       .agg(count(lit(1)).as("c12"))

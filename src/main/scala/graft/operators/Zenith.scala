@@ -336,15 +336,10 @@ object Zenith {
     * keyed agg per doc. No pair joins anywhere.
     */
   def corpusNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val pt = 8
     val chunks = Tables.spread(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(expr(
-        s"""CASE WHEN size(toks) >= $pt THEN
-           |  transform(sequence(1, size(toks) div $pt),
-           |    i -> md5(concat_ws(' ',
-           |      slice(toks, (i - 1) * $pt + 1, $pt))))
-           |ELSE array() END""".stripMargin)).as("ph"))
+      .select(col("doc_id"),
+        explode(Signatures.passageHashes(col("toks"), 8)).as("ph"))
       .distinct()
     val wPh = Window.partitionBy("ph")
     chunks
@@ -392,15 +387,10 @@ object Zenith {
     * doc×doc. Output is |sources|² rows.
     */
   def dedupSourceMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val pt = 8
     val sp = Tables.spread(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
-      .select(col("source"), explode(expr(
-        s"""CASE WHEN size(toks) >= $pt THEN
-           |  transform(sequence(1, size(toks) div $pt),
-           |    i -> md5(concat_ws(' ',
-           |      slice(toks, (i - 1) * $pt + 1, $pt))))
-           |ELSE array() END""".stripMargin)).as("ph"))
+      .select(col("source"),
+        explode(Signatures.passageHashes(col("toks"), 8)).as("ph"))
       .distinct()
     val sizes = sp.groupBy("source").agg(count(lit(1)).as("n_types"))
     val a = sp.select(col("source").as("source_a"), col("ph"))
@@ -1065,20 +1055,10 @@ object Zenith {
     val side = sig.select(col("doc_id"), col("sh"))
     def config(bands: Int): DataFrame = {
       val rows = 16 / bands
-      val banded = sig.select(col("doc_id"), explode(expr(
-        s"""transform(sequence(0, ${bands - 1}),
-           |  b -> named_struct('band', b,
-           |    'bsig', md5(concat_ws(',', slice(sig, b * $rows + 1,
-           |      $rows)))))""".stripMargin)).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"),
-          col("bb.bsig").as("bsig"))
-      banded.as("a")
-        .join(banded.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.bsig") === col("b.bsig") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
+      val banded = sig.select(col("doc_id"),
+          explode(Signatures.md5Bands(col("sig"), bands, rows)).as("bb"))
+        .select(col("doc_id"), col("bb.*"))
+      Signatures.bucketPairs(banded, "doc_id")
         .join(Tables.maybeBroadcast(side.toDF("id_a", "sh_a")), "id_a")
         .join(Tables.maybeBroadcast(side.toDF("id_b", "sh_b")), "id_b")
         .withColumn("inter",

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.Signatures
 
 /** Structured Streaming operators over the event log (SURVEY.md §2 #40):
   * the streaming form of `ts_tumbling` and `sessionize`, asserted
@@ -642,11 +643,10 @@ object EventStream {
       .withColumn("sig", expr(
         s"minhash_sig_from_hashes(ngram_hashes(split(text, ' '), 3), " +
           s"$numHashes)"))
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(0, ${numHashes / bandRows - 1}),
-           |  b -> concat_ws('|', b, md5(concat_ws(',',
-           |    slice(sig, b * $bandRows + 1, $bandRows)))))"""
-          .stripMargin)).as("bucket"))
+      .select(col("doc_id"), explode(Signatures.md5Bands(col("sig"),
+        numHashes / bandRows, bandRows)).as("bb"))
+      .select(col("doc_id"),
+        concat_ws("|", col("bb.band"), col("bb.key")).as("bucket"))
       .as[(Long, String)]
       .groupByKey(_._2)
       .flatMapGroupsWithState[List[Long], CandPair](
@@ -777,12 +777,10 @@ object EventStream {
       .withColumn("hsh", expr("ngram_hashes(split(text, ' '), 3)"))
       .withColumn("sig", expr(
         s"minhash_sig_from_hashes(hsh, $numHashes)"))
-      .select(col("doc_id"), col("hsh"), explode(expr(
-        s"""transform(sequence(0, ${numHashes / bandRows - 1}),
-           |  b -> concat_ws('|', b, md5(concat_ws(',',
-           |    slice(sig, b * $bandRows + 1, $bandRows)))))"""
-          .stripMargin)).as("bucket"))
-      .select(col("bucket"), col("doc_id"), col("hsh"))
+      .select(col("doc_id"), col("hsh"), explode(Signatures.md5Bands(
+        col("sig"), numHashes / bandRows, bandRows)).as("bb"))
+      .select(concat_ws("|", col("bb.band"), col("bb.key")).as("bucket"),
+        col("doc_id"), col("hsh"))
       .as[(String, Long, Seq[Long])]
       .groupByKey(_._1)
       .transformWithState(new NearDupIndexProcessor,

@@ -60,9 +60,17 @@ class MisraGriesSpec extends AnyFunSuite {
       .select("id_a", "id_b").collect().map(_.toSeq).toSet
     val docs = Tables(sp, TestSpark.sf, "documents")
       .select("doc_id", "text")
+    // the a side spread over the cores: the non-equi join runs one
+    // task per a partition, and the scan is a single row group
     val a = docs.select(col("doc_id").as("id_a"), col("text").as("t_a"))
+      .repartition(sp.sparkContext.defaultParallelism)
     val b = docs.select(col("doc_id").as("id_b"), col("text").as("t_b"))
     val brute = a.join(b, col("id_a") < col("id_b"))
+      // the bounded levenshtein stops once the distance passes
+      // floor(0.20005 * maxlen) and then returns -1; every pair the
+      // exact predicate below keeps lies within that bound
+      .where(expr("levenshtein(t_a, t_b, cast(floor(0.20005 * " +
+        "greatest(length(t_a), length(t_b))) as int)) >= 0"))
       .where(expr("1.0 - levenshtein(t_a, t_b) / " +
         "cast(greatest(length(t_a), length(t_b)) as double) >= 0.79995"))
       .select("id_a", "id_b").collect().map(_.toSeq).toSet
