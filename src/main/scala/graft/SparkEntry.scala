@@ -42,12 +42,11 @@ object SparkEntry {
       (Zenith.queries, Zenith.oracles),
       (Pinnacle.queries, Pinnacle.oracles),
       (Summit.queries, Summit.oracles),
-      (Apex.queries, Apex.oracles),
       (Crest.queries, Crest.oracles),
       (Keystone.queries, Keystone.oracles),
       (Lattice.queries, Lattice.oracles),
       (Aegis.queries, Aegis.oracles),
-      (Forge.queries, Forge.oracles),
+      (Layout.queries, Layout.oracles),
     )
   }
 

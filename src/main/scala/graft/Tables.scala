@@ -83,16 +83,10 @@ object Tables {
     JvmMemo.getOrCompute("rows", name, dir) {
       import scala.jdk.CollectionConverters._
       val conf = spark.sparkContext.hadoopConfiguration
-      var total = 0L
-      ParquetFiles.list(spark, s"$dir/$name.parquet").foreach { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), conf))
-        try total += reader.getFooter.getBlocks.asScala
-          .map(_.getRowCount).sum
-        finally reader.close()
-      }
-      java.lang.Long.valueOf(total)
+      java.lang.Long.valueOf(ParquetFiles.list(spark, s"$dir/$name.parquet")
+        .map(ParquetFiles.withReader(_, conf)(
+          _.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
+        .sum)
     }.longValue()
 
   /** Saturated-cluster profile dial: `spark.graft.clusterSaturated`

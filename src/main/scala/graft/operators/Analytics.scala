@@ -11,7 +11,10 @@ import graft.Exprs.{r4, r4Sql, sumDec, sumDecSql}
   * readability scoring, concentration/diversity indices, and interval
   * coverage — each a single declarative plan with exact-arithmetic
   * discipline (integer counters and decimal sums everywhere; IEEE
-  * division only in the final projection under r4).
+  * division only in the final projection under r4). Also the
+  * deterministic samplers that evaluate themselves against exact
+  * answers: mergeable bottom-k group samples (#322) and sequential
+  * Poisson PPS samples (#342).
   */
 object Analytics {
 
@@ -565,7 +568,185 @@ object Analytics {
        |FROM br WHERE tag = 1 AND vp IS NOT NULL AND vn IS NOT NULL
        |ORDER BY view_event_id""".stripMargin
 
+  /** An event's value in integer cents: the samplers' weight. */
+  private val centsExpr = "cast(floor(value * 100.0 + 0.5) as bigint)"
+  private val centsSql = "CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT)"
+  private val dec = DecimalType(38, 0)
+
+  // --------------------------------------------------------------- #322
+  /** #322 mergeable bottom-k group samples + estimate-vs-exact eval:
+    * every event type carries a k=32 deterministic uniform sample of
+    * its purchase-value cents (rows with the 32 smallest md5 hashes of
+    * their event id — the KMV lattice emitting SAMPLE ROWS instead of
+    * a cardinality, `functions.SampleSketch`), evaluated against the
+    * exact group mean. The sample is a pure set function of the data —
+    * any partition layout, merge tree, or replay yields the identical
+    * exemplar set (spec-pinned), which is what makes it usable as
+    * merge-on-read state in the streamed twin.
+    *
+    * Exactness: sample membership is proven by the integer
+    * sample_sum_cents (the oracle re-derives the same 32 rows by
+    * `ROW_NUMBER() OVER (ORDER BY hash, id)`); means and the relative
+    * error are r4'd IEEE over exact integers, with the zero-mean
+    * denominator gated to null on both engines.
+    *
+    * Scale: ONE grouped aggregation; partial state is ≤ 24·k bytes per
+    * group and combines map-side — only sketches cross the shuffle
+    * (the reason a reservoir with random draws is the wrong tool: not
+    * mergeable, not replayable, not oracle-checkable).
+    */
+  def sampleBottomk(spark: SparkSession, dir: String): DataFrame = {
+    val e = Tables.eventsUs(spark, dir)
+      .select(col("event_type"), col("event_id"),
+        expr(centsExpr).as("c"))
+      .withColumn("h", expr(
+        "cast(conv(substring(md5(cast(event_id as string)), 1, 15), " +
+          "16, 10) as long)"))
+    e.groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        sum(col("c").cast(dec)).as("sc"),
+        expr("bottomk_sample(h, event_id, c, 32)").as("sample"))
+      .select(col("event_type"), col("n"),
+        size(col("sample")).cast("long").as("sample_n"),
+        expr("aggregate(sample, 0L, (a, x) -> a + x)")
+          .as("sample_sum_cents"),
+        col("sc"))
+      .select(col("event_type"), col("n"), col("sample_n"),
+        col("sample_sum_cents"),
+        r4(col("sc").cast("double") / col("n") / 100.0)
+          .as("exact_mean_dollars"),
+        r4(col("sample_sum_cents").cast("double") / col("sample_n")
+          / 100.0).as("sample_mean_dollars"),
+        when(col("sc") =!= 0L,
+          r4(abs(col("sample_sum_cents").cast("double") / col("sample_n")
+            - col("sc").cast("double") / col("n"))
+            / abs(col("sc").cast("double") / col("n")))).as("rel_err"))
+      .orderBy("event_type")
+  }
+
+  val sampleBottomkSql: String =
+    s"""WITH e AS (
+       |  SELECT event_type, event_id, $centsSql AS c,
+       |    ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))
+       |      ::UBIGINT AS h
+       |  FROM events),
+       |rk AS (
+       |  SELECT event_type, c, ROW_NUMBER() OVER (
+       |    PARTITION BY event_type ORDER BY h, event_id) AS rn
+       |  FROM e WHERE c IS NOT NULL),
+       |samp AS (
+       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS sample_n,
+       |    CAST(SUM(c) AS BIGINT) AS sample_sum_cents
+       |  FROM rk WHERE rn <= 32 GROUP BY 1),
+       |ex AS (
+       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+       |    SUM(c::HUGEINT) AS sc
+       |  FROM e GROUP BY 1)
+       |SELECT ex.event_type, ex.n, samp.sample_n, samp.sample_sum_cents,
+       |  ${r4Sql("CAST(ex.sc AS DOUBLE) / ex.n / 100.0")}
+       |    AS exact_mean_dollars,
+       |  ${r4Sql("CAST(samp.sample_sum_cents AS DOUBLE) " +
+                  "/ samp.sample_n / 100.0")} AS sample_mean_dollars,
+       |  CASE WHEN ex.sc <> 0 THEN
+       |    ${r4Sql("ABS(CAST(samp.sample_sum_cents AS DOUBLE) " +
+                    "/ samp.sample_n - CAST(ex.sc AS DOUBLE) / ex.n) " +
+                    "/ ABS(CAST(ex.sc AS DOUBLE) / ex.n)")} END AS rel_err
+       |FROM ex JOIN samp ON ex.event_type = samp.event_type
+       |ORDER BY ex.event_type""".stripMargin
+
+  // --------------------------------------------------------------- #342
+  /** #342 sequential Poisson PPS sampling (Ohlsson): per event type,
+    * the k=50 rows with smallest ξᵢ = uᵢ/wᵢ form a probability-
+    * proportional-to-size sample — the estimator-grade upgrade of the
+    * uniform samplers (#44/#316 allocate BETWEEN strata; this weights
+    * WITHIN one): big-value events are near-certain draws, so a
+    * value-weighted total is estimated from k rows with far less
+    * variance than uniform sampling, which is how production metric
+    * pipelines sample pennies-to-millions payment streams. uᵢ is the
+    * #67 md5 uniform — deterministic, rerunnable, stable under other
+    * rows' arrival (a row's ξ never changes, the bottom-k property
+    * #322 proved mergeable). The eval emits the PPS estimate of the
+    * population COUNT (Σ 1/pᵢ over the sample, pᵢ = k·wᵢ/W — for the
+    * count target, PPS is deliberately mis-matched weighting, so the
+    * estimate is unbiased but visibly noisier on skewed types; the
+    * per-type relative error IS the read) next to the exact count,
+    * plus the exact integer sample-value sum as the membership proof
+    * (the #322 device).
+    *
+    * Scale: ranking is a per-type bottom-k (WindowGroupLimit pushes
+    * the rank filter map-side, partial top-k per partition before the
+    * shuffle); everything emitted is one grouped agg over ≤ k·types
+    * rows. Every double is one IEEE expression over exact integers,
+    * sumDec-summed.
+    */
+  def samplePps(spark: SparkSession, dir: String): DataFrame = {
+    val k = 50
+    val e = Tables.eventsUs(spark, dir)
+      .select(col("event_type"), col("event_id"),
+        expr(centsExpr).as("c"))
+      .where(col("c") > 0L)
+    val tot = e.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum("c").as("w_total_cents"))
+    val xi = (conv(substring(md5(col("event_id").cast("string")), 1, 8),
+      16, 10).cast("double") / lit(4294967296.0)) / col("c").cast("double")
+    val w = Window.partitionBy("event_type")
+      .orderBy(col("xi"), col("event_id"))
+    val s = e.withColumn("xi", xi)
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") <= k)
+    val term = col("w_total_cents").cast("double") /
+      (lit(k.toDouble) * col("c").cast("double"))
+    s.join(broadcast(tot), "event_type")
+      .groupBy("event_type")
+      .agg(max("n").as("n"), max("w_total_cents").as("w_total_cents"),
+        count(lit(1)).as("k_taken"), sum("c").as("sample_w_cents"),
+        sumDec(term, 38, 8).as("n_est_raw"))
+      .select(col("event_type"), col("n"), col("w_total_cents"),
+        col("k_taken"), col("sample_w_cents"),
+        r4(col("n_est_raw")).as("n_est"),
+        r4(abs(col("n_est_raw") - col("n").cast("double")) /
+          col("n").cast("double")).as("err_rel"))
+      .orderBy("event_type")
+  }
+
+  val samplePpsSql: String =
+    s"""WITH e AS (
+       |  SELECT event_type, event_id,
+       |    $centsSql AS c
+       |  FROM events
+       |  WHERE $centsSql > 0),
+       |tot AS (
+       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+       |    CAST(SUM(c) AS BIGINT) AS w_total_cents
+       |  FROM e GROUP BY 1),
+       |s AS (
+       |  SELECT event_type, event_id, c FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
+       |      ORDER BY (('0x' || substr(md5(CAST(event_id AS VARCHAR)),
+       |        1, 8))::UBIGINT / 4294967296.0) / CAST(c AS DOUBLE),
+       |        event_id) AS rn
+       |    FROM e)
+       |  WHERE rn <= 50),
+       |j AS (
+       |  SELECT s.event_type, s.c, t.n, t.w_total_cents
+       |  FROM s JOIN tot t ON s.event_type = t.event_type),
+       |agg AS (
+       |  SELECT event_type, MAX(n) AS n,
+       |    MAX(w_total_cents) AS w_total_cents,
+       |    CAST(COUNT(*) AS BIGINT) AS k_taken,
+       |    CAST(SUM(c) AS BIGINT) AS sample_w_cents,
+       |    ${sumDecSql("CAST(w_total_cents AS DOUBLE) / " +
+                        "(50.0 * CAST(c AS DOUBLE))", 38, 8)} AS n_est_raw
+       |  FROM j GROUP BY 1)
+       |SELECT event_type, n, w_total_cents, k_taken, sample_w_cents,
+       |  ${r4Sql("n_est_raw")} AS n_est,
+       |  ${r4Sql("ABS(n_est_raw - CAST(n AS DOUBLE)) / " +
+                  "CAST(n AS DOUBLE)")} AS err_rel
+       |FROM agg ORDER BY event_type""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "sample_bottomk" -> (sampleBottomk _),
+    "sample_pps" -> (samplePps _),
     "text_cms_freq" ->
       ((s: SparkSession, d: String) => textCmsFreq(s, d)),
     "orders_trend" -> (ordersTrend _),
@@ -581,6 +762,8 @@ object Analytics {
       ((s: SparkSession, d: String) => intervalsMerge(s, d)))
 
   val oracles: Map[String, String] = Map(
+    "sample_bottomk" -> sampleBottomkSql,
+    "sample_pps" -> samplePpsSql,
     "text_cms_freq" -> textCmsFreqSql,
     "orders_trend" -> ordersTrendSql,
     "ts_interpolate" -> tsInterpolateSql,

@@ -924,87 +924,6 @@ object Extensions {
        |  r_band * 100 + f_band * 10 + m_band AS rfm
        |FROM b ORDER BY o_custkey""".stripMargin
 
-  // --------------------------------------------------------------- #108
-  /** #108 Z-order layout analysis: quantize two dimensions to 8 bits
-    * (rank-based, so any distribution flattens), interleave the bits
-    * into a 16-bit Morton key, split rows into 16 "files" by z-range —
-    * and measure per-file min/max SPANS of both dimensions against the
-    * single-column-sort layout. The span is exactly what file-level
-    * min/max statistics prune on: a predicate on dim Y skips files
-    * whose Y-span misses it, so avg span/256 estimates the fraction of
-    * files a point query must read. Linear layout: one dim's span ≈ 1
-    * file, the other ≈ the full domain; z-order bounds BOTH near
-    * sqrt — the multi-dimensional data-skipping trade every lakehouse
-    * OPTIMIZE ZORDER makes, expressed as a measurable plan.
-    *
-    * Scale: three global rank windows over the fact table (the same
-    * single-partition-sort caveat as #85 — at 100 TB use range
-    * partitioning for the quantiles); the Morton key is pure integer
-    * map-side math; the report aggregates 2×16 file stats.
-    */
-  def layoutZorder(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val o = Tables(spark, dir, "orders")
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val qx = ntile(256).over(
-      Window.orderBy(col("o_custkey"), col("o_orderkey"))) - 1
-    val qy = ntile(256).over(
-      Window.orderBy(col("o_totalprice"), col("o_orderkey"))) - 1
-    val quant = o.withColumn("qx", qx).withColumn("qy", qy)
-      .withColumn("z", expr(
-        """aggregate(sequence(0, 7), 0, (acc, i) ->
-          |  acc + shiftleft(shiftright(qx, i) & 1, 2 * i)
-          |      + shiftleft(shiftright(qy, i) & 1, 2 * i + 1))"""
-          .stripMargin))
-    val files = quant
-      .withColumn("zfile",
-        ntile(16).over(Window.orderBy(col("z"), col("o_orderkey"))))
-      .withColumn("lfile",
-        ntile(16).over(Window.orderBy(col("qx"), col("o_orderkey"))))
-    def spans(fileCol: String, layout: String): DataFrame = files
-      .groupBy(col(fileCol).as("f"))
-      .agg((max(col("qx")) - min(col("qx")) + 1).as("sx"),
-        (max(col("qy")) - min(col("qy")) + 1).as("sy"))
-      .agg(r4(sum(col("sx")) / lit(16.0 * 256)).as("avg_span_x"),
-        r4(sum(col("sy")) / lit(16.0 * 256)).as("avg_span_y"))
-      .select(lit(layout).as("layout"), col("avg_span_x"),
-        col("avg_span_y"))
-    spans("zfile", "zorder").union(spans("lfile", "linear"))
-      .orderBy("layout")
-  }
-
-  val layoutZorderSql: String =
-    s"""WITH q AS (
-       |  SELECT o_orderkey,
-       |    NTILE(256) OVER (ORDER BY o_custkey, o_orderkey) - 1 AS qx,
-       |    NTILE(256) OVER (ORDER BY o_totalprice, o_orderkey) - 1 AS qy
-       |  FROM orders),
-       |z AS (
-       |  SELECT *, CAST(list_sum(list_transform(range(0, 8), i ->
-       |    (((qx >> CAST(i AS INT)) & 1) << CAST(2 * i AS INT))
-       |    + (((qy >> CAST(i AS INT)) & 1) << CAST(2 * i + 1 AS INT))))
-       |    AS INT) AS zval
-       |  FROM q),
-       |files AS (
-       |  SELECT qx, qy,
-       |    NTILE(16) OVER (ORDER BY zval, o_orderkey) AS zfile,
-       |    NTILE(16) OVER (ORDER BY qx, o_orderkey) AS lfile
-       |  FROM z),
-       |zs AS (
-       |  SELECT 'zorder' AS layout,
-       |    ${r4Sql("SUM(sx) / (16.0 * 256)")} AS avg_span_x,
-       |    ${r4Sql("SUM(sy) / (16.0 * 256)")} AS avg_span_y
-       |  FROM (SELECT zfile, MAX(qx) - MIN(qx) + 1 AS sx,
-       |        MAX(qy) - MIN(qy) + 1 AS sy FROM files GROUP BY zfile)),
-       |ls AS (
-       |  SELECT 'linear' AS layout,
-       |    ${r4Sql("SUM(sx) / (16.0 * 256)")} AS avg_span_x,
-       |    ${r4Sql("SUM(sy) / (16.0 * 256)")} AS avg_span_y
-       |  FROM (SELECT lfile, MAX(qx) - MIN(qx) + 1 AS sx,
-       |        MAX(qy) - MIN(qy) + 1 AS sy FROM files GROUP BY lfile))
-       |SELECT * FROM zs UNION ALL SELECT * FROM ls ORDER BY layout"""
-      .stripMargin
-
   // --------------------------------------------------------------- #110
   /** #110 ABC (Pareto) classification: customers ranked by revenue,
     * classed A/B/C at 50%/80% cumulative share — the inventory-
@@ -1358,7 +1277,6 @@ object Extensions {
     "join_theta_bands" -> (joinThetaBands _),
     "events_ab_lift" -> (eventsAbLift _),
     "orders_abc" -> (ordersAbc _),
-    "layout_zorder" -> (layoutZorder _),
     "orders_rfm" -> (ordersRfm _),
     "pipeline_clean_corpus" -> (pipelineCleanCorpus _),
     "agg_kmv_distinct" -> (aggKmvDistinct _),
@@ -1390,7 +1308,6 @@ object Extensions {
     "join_theta_bands" -> joinThetaBandsSql,
     "events_ab_lift" -> eventsAbLiftSql,
     "orders_abc" -> ordersAbcSql,
-    "layout_zorder" -> layoutZorderSql,
     "orders_rfm" -> ordersRfmSql,
     "pipeline_clean_corpus" -> pipelineCleanCorpusSql,
     "agg_kmv_distinct" -> aggKmvDistinctSql,

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * the metadata schema the downstream pipeline would consume. One leg
   * (#285 `mm_image_resize`) runs a REAL codec — JDK ImageIO over
   * planted deterministic BMPs — with its oracle pinning the decoded
-  * pixels to the closed-form pixel function.
+  * pixels to the closed-form pixel function; #290 `mm_image_phash`
+  * hashes those real decoded pixels.
   *
   * Scale: the payload never shuffles — decode is map-side narrow on the
   * scan partitions; only the (tiny) typed metadata flows onward.
@@ -841,7 +842,120 @@ object Multimodal {
       |  LEFT JOIN zc ON d.doc_id = zc.doc_id
       |ORDER BY d.doc_id""".stripMargin
 
+  // --------------------------------------------------------------- #290
+  /** #290 perceptual hash over REAL decoded pixels: the #285 codec
+    * path extended to the #140 signature family. Each doc's planted
+    * BMP decodes through JDK ImageIO; the 64-bit average-hash works on
+    * TRUE pixels — 8×8 blocks (dimensions are multiples of 16, so
+    * blocks are exact), bit = block-sum·64 > image-sum (equal-size
+    * blocks clear the mean compare to integers). A second REAL encode/
+    * decode of the same image with deterministic sparse pixel noise
+    * (+1 where (x+y+id) ≡ 0 mod 97) yields the robustness read: the
+    * hamming distance between the clean and noisy signatures. The
+    * signature ships as two 32-bit halves (a full 2⁶³ bit would
+    * overflow BIGINT on the oracle side).
+    *
+    * Scale: map-side narrow — two in-partition encode/decode passes
+    * per doc, bounded by the 128×128 dimension cap; only (doc_id, two
+    * int halves, hamming) ever leaves the scan.
+    */
+  def mmImagePhash(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val ids = graft.Tables.spread(spark, dir, "documents")
+      .select(col("doc_id")).as[Long]
+    ids.mapPartitions(_.map { id =>
+      def sigBits(img: java.awt.image.BufferedImage): Array[Int] = {
+        val w = img.getWidth
+        val h = img.getHeight
+        val bw = w / 8
+        val bh = h / 8
+        // bulk raster read — the #285 measured getRGB fix
+        val px = img.getRaster.getSamples(0, 0, w, h, 0,
+          new Array[Int](w * h))
+        val sums = new Array[Long](64)
+        var total = 0L
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val v = px(y * w + x).toLong
+            sums((y / bh) * 8 + x / bw) += v
+            total += v
+            x += 1
+          }
+          y += 1
+        }
+        Array.tabulate(64)(i => if (sums(i) * 64 > total) 1 else 0)
+      }
+      val clean = sigBits(decodeBmp(plantedBmp(id)))
+      val noisy = sigBits(decodeBmp(plantedBmpNoisy(id)))
+      var hi = 0L
+      var lo = 0L
+      var ham = 0L
+      var i = 0
+      while (i < 64) {
+        if (clean(i) == 1) {
+          if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
+        }
+        if (clean(i) != noisy(i)) ham += 1
+        i += 1
+      }
+      (id, hi, lo, ham)
+    }).toDF("doc_id", "sig_hi", "sig_lo", "hamming_noise")
+      .orderBy("doc_id")
+  }
+
+  /** The oracle never decodes a BMP: it evaluates the closed-form
+    * pixel functions and the same block/bit algebra — equality proves
+    * both real decodes returned the true pixels.
+    */
+  val mmImagePhashSql: String = {
+    // pixel streams as SQL generators: v = (3x+5y+id) % 256, noisy
+    // adds 1 where (x+y+id) % 97 = 0 (wrapping mod 256)
+    def sig(noisy: Boolean): String = {
+      val v = if (noisy)
+        "((3 * x + 5 * y + doc_id) % 256 + " +
+          "CASE WHEN (x + y + doc_id) % 97 = 0 THEN 1 ELSE 0 END) % 256"
+      else "(3 * x + 5 * y + doc_id) % 256"
+      s"""SELECT doc_id, (y // bh) * 8 + (x // bw) AS blk, $v AS v
+         |  FROM (
+         |    SELECT doc_id, w, h, w // 8 AS bw, h // 8 AS bh,
+         |      unnest(range(0, w * h)) AS i
+         |    FROM dims) q0,
+         |    LATERAL (SELECT i % w AS x, i // w AS y) q1""".stripMargin
+    }
+    def bits(src: String): String =
+      s"""SELECT doc_id, blk,
+         |  CASE WHEN bs * 64 > SUM(bs) OVER (PARTITION BY doc_id)
+         |    THEN 1 ELSE 0 END AS bit
+         |FROM (SELECT doc_id, blk, SUM(v) AS bs FROM ($src) GROUP BY 1, 2)"""
+        .stripMargin
+    s"""WITH dims AS (
+       |  SELECT doc_id,
+       |    16 * (1 + (doc_id * 7 + 3) % 8) AS w,
+       |    16 * (1 + (doc_id * 5 + 1) % 8) AS h
+       |  FROM documents),
+       |cb AS (${bits(sig(noisy = false))}),
+       |nb AS (${bits(sig(noisy = true))}),
+       |sigs AS (
+       |  SELECT doc_id,
+       |    CAST(SUM(CASE WHEN blk >= 32 THEN bit * (1::BIGINT << (blk - 32))
+       |      ELSE 0 END) AS BIGINT) AS sig_hi,
+       |    CAST(SUM(CASE WHEN blk < 32 THEN bit * (1::BIGINT << blk)
+       |      ELSE 0 END) AS BIGINT) AS sig_lo
+       |  FROM cb GROUP BY doc_id),
+       |ham AS (
+       |  SELECT cb.doc_id,
+       |    CAST(SUM(ABS(cb.bit - nb.bit)) AS BIGINT) AS hamming_noise
+       |  FROM cb JOIN nb ON cb.doc_id = nb.doc_id AND cb.blk = nb.blk
+       |  GROUP BY cb.doc_id)
+       |SELECT s.doc_id, s.sig_hi, s.sig_lo, h.hamming_noise
+       |FROM sigs s JOIN ham h ON s.doc_id = h.doc_id
+       |ORDER BY s.doc_id""".stripMargin
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "mm_image_phash" -> (mmImagePhash _),
     "mm_audio_pcm_energy" -> (mmAudioPcmEnergy _),
     "mm_phash_dedup" ->
       ((s: SparkSession, d: String) => mmPhashDedup(s, d)),
@@ -852,6 +966,7 @@ object Multimodal {
     "mm_image_resize" -> (mmImageResize _))
 
   val oracles: Map[String, String] = Map(
+    "mm_image_phash" -> mmImagePhashSql,
     "mm_audio_pcm_energy" -> mmAudioPcmEnergySql,
     "mm_phash_dedup" -> mmPhashDedupSql(),
     "mm_binary_meta" -> mmBinaryMetaSql,

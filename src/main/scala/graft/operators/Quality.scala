@@ -27,6 +27,11 @@ import graft.Exprs.{r4, r4Sql}
   *  - anomaly: per-user moments via ONE window shuffle on user_id;
   *    decimal-exact sums make mean/variance/z bit-identical across
   *    engines, so the |z| threshold can't flake the gate.
+  *
+  * Table audits over the same gates and columns: exact Shapley
+  * attribution of the filter funnel's drops (#289), the Deequ-style
+  * column profiler (#326) and its constraint suite (#327) — each one
+  * pass over the documents.
   */
 object Quality {
 
@@ -482,7 +487,320 @@ object Quality {
       |GROUP BY type_a, type_b
       |ORDER BY n_cells DESC, type_a, type_b""".stripMargin
 
+  // --------------------------------------------------------------- #289
+  /** #289 exact Shapley drop-attribution over the four #81 gates: how
+    * much of the corpus does each rule FAIRLY cost, averaged over
+    * every evaluation order? #81's funnel charges a doc to the first
+    * gate in ONE fixed order and #273 optimizes that order; Shapley
+    * removes the order from the question — a doc failing two rules
+    * splits its drop between them. With 4 rules the game is exact:
+    * value(S) = share of docs passing every rule in S, and the
+    * 16-cell fire-pattern distribution (ONE map-side pass + ONE tiny
+    * agg) determines all 16 coalition values.
+    *
+    * Exactness: φ_r·24·N = Σ over the 8 subsets S ∌ r of
+    * |S|!·(3−|S|)!·[passN(S) − passN(S∪{r})] — an INTEGER; the
+    * emitted share is ONE r4'd division by 24N. Conservation (spec-
+    * pinned): Σ_r drop_share == overall drop rate (v(∅) − v(R)).
+    *
+    * Scale: one doc-sized pass → 16-row pattern table; coalition
+    * values and the Shapley sum run on constant-size literal dims
+    * (16 masks × 16 patterns, 4 rules × 8 subsets) — broadcast
+    * crosses of O(1) tables, nothing data-sized after the scan.
+    */
+  def qualityRuleShapley(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    // ≤16 rows behind a full doc scan, referenced by both `pass` and
+    // the total — persist (the span-sized-cache rule of #288): one
+    // scan instead of two at any corpus size
+    val pat = Tables.persistSlot("quality.shapley.patterns",
+      Pinnacle.ruleFlags(spark, dir)
+        .select((col("f0") + col("f1") * 2 + col("f2") * 4 + col("f3") * 8)
+          .as("p"))
+        .groupBy("p").agg(count(lit(1)).as("c")))
+    val masks = spark.range(16).select(col("id").as("m"))
+    // passN(mask) = docs whose fire pattern avoids every rule in mask
+    val pass = pat.crossJoin(broadcast(masks))
+      .groupBy("m")
+      .agg(sum(when(expr("(p & m) = 0"), col("c")).otherwise(0L))
+        .as("pn"))
+    val n = pat.agg(sum("c").as("n"))
+    // (rule, subset-without-rule, permutation weight |S|!·(3-|S|)!)
+    val ruleNames =
+      Seq("min_tokens", "repetition", "token_shape", "digit_ratio")
+    val combos = (for {
+      r <- 0 until 4
+      s <- 0 until 16 if (s & (1 << r)) == 0
+    } yield {
+      val k = Integer.bitCount(s)
+      val wt = Seq(6L, 2L, 2L, 6L)(k)
+      (r.toLong, ruleNames(r), s.toLong, (s | (1 << r)).toLong, wt)
+    }).toDF("rule_id", "rule", "s", "sr", "wt")
+    combos
+      .join(broadcast(pass.select(col("m").as("s"), col("pn").as("pn_s"))),
+        "s")
+      .join(broadcast(pass.select(col("m").as("sr"), col("pn").as("pn_sr"))),
+        "sr")
+      .groupBy("rule_id", "rule")
+      .agg(sum(col("wt") * (col("pn_s") - col("pn_sr"))).as("num"))
+      .crossJoin(broadcast(n))
+      .select(col("rule_id"), col("rule"),
+        r4(col("num").cast("double") / (col("n") * 24).cast("double"))
+          .as("drop_share"))
+      .orderBy("rule_id")
+  }
+
+  val qualityRuleShapleySql: String =
+    s"""WITH ${Pinnacle.ruleFlagsCtesSql},
+       |pat AS (
+       |  SELECT f0 + f1 * 2 + f2 * 4 + f3 * 8 AS p,
+       |    CAST(COUNT(*) AS BIGINT) AS c
+       |  FROM fl GROUP BY 1),
+       |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM pat),
+       |pass AS (
+       |  SELECT m.m, CAST(SUM(CASE WHEN (pat.p & m.m) = 0 THEN pat.c
+       |    ELSE 0 END) AS BIGINT) AS pn
+       |  FROM pat CROSS JOIN (SELECT unnest(range(0, 16)) AS m) m
+       |  GROUP BY m.m),
+       |combos AS (
+       |  SELECT r.r AS rule_id,
+       |    ['min_tokens', 'repetition', 'token_shape', 'digit_ratio']
+       |      [CAST(r.r AS INT) + 1] AS rule,
+       |    s.m AS s, s.m | (1 << CAST(r.r AS INT)) AS sr,
+       |    CASE bit_count(s.m) WHEN 0 THEN 6 WHEN 1 THEN 2
+       |      WHEN 2 THEN 2 ELSE 6 END AS wt
+       |  FROM (SELECT unnest(range(0, 4)) AS r) r
+       |  JOIN (SELECT unnest(range(0, 16)) AS m) s
+       |    ON (s.m & (1 << CAST(r.r AS INT))) = 0)
+       |SELECT c.rule_id, c.rule,
+       |  ${r4Sql("CAST(SUM(c.wt * (ps.pn - psr.pn)) AS DOUBLE) " +
+                  "/ (MAX(tot.n) * 24)")} AS drop_share
+       |FROM combos c
+       |  JOIN pass ps ON c.s = ps.m
+       |  JOIN pass psr ON c.sr = psr.m
+       |  CROSS JOIN tot
+       |GROUP BY c.rule_id, c.rule
+       |ORDER BY c.rule_id""".stripMargin
+
+  // --------------------------------------------------------------- #326
+  private val profileCols = Seq("doc_id", "lang", "source", "n_chars")
+
+  /** #326 column profiler — the Deequ-style first read on ANY new
+    * table a data platform ingests: per column the row count, null
+    * count, completeness, APPROXIMATE distinct, and a min/max
+    * representation (value bounds for scalars, LENGTH bounds for the
+    * text payload). The whole profile is ONE map-side-combinable pass
+    * over the table — five sketches and a handful of counters per
+    * partition, unpivoted to the per-column report with `stack`.
+    *
+    * Sketch choice: KMV (k=256), NOT HLL — a profiler meets columns
+    * across the whole cardinality spectrum, and KMV is EXACT below k
+    * (a 5-value lang column reports 5.0, where HLL's raw estimate
+    * without its small-range ln() correction reads ~370 — measured,
+    * and the correction is exactly the cross-engine ln() this repo
+    * keeps out of oracles) while carrying ~1/√k error above k. 2 KiB
+    * of partial state per column crosses the shuffle, never value
+    * sets — the exact per-column countDistinct a 100 TB profile
+    * cannot afford.
+    *
+    * Exactness: counts/bounds exact; the KMV estimate is the
+    * literal-double (k−1)/(h_k/2^64) over the exact k-th smallest
+    * 60-bit md5 hash, which the oracle re-derives by ORDER BY/OFFSET.
+    */
+  def qualityProfile(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(spark, dir, "documents")
+    // the full-64-bit md5 hash (ngram_md5_hashes at n=1 over a
+    // singleton array) — KMV's (k−1)/(h_k/2^64) estimator needs the
+    // whole hash range; a 60-bit hash reads 16× high (measured)
+    def kmvOf(c: String): org.apache.spark.sql.Column = expr(
+      s"""kmv_distinct(
+         |  if(isnull($c), cast(null as array<bigint>),
+         |     ngram_md5_hashes(array(cast($c as string)), 1)), 256)"""
+        .stripMargin)
+    val aggs =
+      Seq(count(lit(1)).as("n")) ++
+        profileCols.flatMap(c => Seq(
+          count(col(c)).as(s"p_$c"),
+          kmvOf(c).as(s"ad_$c"),
+          min(col(c)).cast("string").as(s"lo_$c"),
+          max(col(c)).cast("string").as(s"hi_$c"))) ++
+        Seq(count(col("text")).as("p_text"),
+          kmvOf("text").as("ad_text"),
+          min(length(col("text"))).cast("string").as("lo_text"),
+          max(length(col("text"))).cast("string").as("hi_text"))
+    val wide = docs.agg(aggs.head, aggs.tail: _*)
+    val stackArgs = (profileCols :+ "text")
+      .map(c => s"'$c', p_$c, ad_$c, lo_$c, hi_$c").mkString(", ")
+    wide
+      .selectExpr("n", s"stack(5, $stackArgs) as " +
+        "(col_name, n_present, ad, min_repr, max_repr)")
+      .select(col("col_name"), col("n").as("n_rows"),
+        (col("n") - col("n_present")).as("n_nulls"),
+        when(col("n") > 0L, r4(col("n_present").cast("double") /
+          col("n").cast("double"))).as("completeness"),
+        when(col("n_present") > 0L, r4(col("ad")))
+          .as("approx_distinct"),
+        col("min_repr"), col("max_repr"))
+      .orderBy("col_name")
+  }
+
+  val qualityProfileSql: String = {
+    def branch(c: String, v: String, lo: String, hi: String): String =
+      s"""hv_$c AS (
+         |  SELECT DISTINCT ('0x' || substr(md5($v), 1, 16))::UBIGINT
+         |    AS h
+         |  FROM documents WHERE $v IS NOT NULL),
+         |k_$c AS (
+         |  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM hv_$c) AS nd,
+         |    (SELECT h FROM hv_$c ORDER BY h LIMIT 1 OFFSET 255) AS hk),
+         |m_$c AS (
+         |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(COUNT($v) AS BIGINT) AS p,
+         |    CAST($lo AS VARCHAR) AS lo, CAST($hi AS VARCHAR) AS hi
+         |  FROM documents)""".stripMargin
+    val estSql = "CASE WHEN k.nd < 256 THEN CAST(k.nd AS DOUBLE) " +
+      "ELSE 255.0 / (CAST(k.hk AS DOUBLE) / 18446744073709551616.0) END"
+    def leg(c: String): String =
+      s"""SELECT '$c' AS col_name, m.n AS n_rows, m.n - m.p AS n_nulls,
+         |  CASE WHEN m.n > 0 THEN
+         |    ${r4Sql("CAST(m.p AS DOUBLE) / CAST(m.n AS DOUBLE)")}
+         |    END AS completeness,
+         |  CASE WHEN m.p > 0 THEN
+         |    ${r4Sql(estSql)}
+         |    END AS approx_distinct,
+         |  m.lo AS min_repr, m.hi AS max_repr
+         |FROM m_$c m CROSS JOIN k_$c k""".stripMargin
+    val specs = Seq(
+      ("doc_id", "CAST(doc_id AS VARCHAR)", "MIN(doc_id)", "MAX(doc_id)"),
+      ("lang", "lang", "MIN(lang)", "MAX(lang)"),
+      ("source", "source", "MIN(source)", "MAX(source)"),
+      ("n_chars", "CAST(n_chars AS VARCHAR)", "MIN(n_chars)",
+        "MAX(n_chars)"),
+      ("text", "text", "MIN(length(text))", "MAX(length(text))"))
+    s"""WITH ${specs.map(s => branch(s._1, s._2, s._3, s._4))
+         .mkString(",\n")}
+       |SELECT * FROM (
+       |${specs.map(s => leg(s._1)).mkString("\nUNION ALL\n")})
+       |ORDER BY col_name""".stripMargin
+  }
+
+  // --------------------------------------------------------------- #327
+  /** #327 constraint verification — the Deequ-check suite the profiler
+    * feeds: declarative data-quality assertions evaluated in ONE pass
+    * and emitted as an audit table (check, measured metric, threshold,
+    * passed). Checks cover the real failure modes of an ingested
+    * corpus: key completeness and uniqueness, payload completeness,
+    * categorical containment (lang ⊆ the allowed set), CROSS-COLUMN
+    * consistency (n_chars must equal length(text) — the declared
+    * metadata matching the payload), and value bounds — where the
+    * min-length floor legitimately FAILS on this corpus (min 48 < 100),
+    * so the audit demonstrably reports both outcomes.
+    *
+    * Exactness: every pass/fail verdict compares EXACT INTEGERS
+    * (100·p ≥ 99·n for the 0.99 floor — never a float threshold), so
+    * the booleans cannot drift; metrics are r4'd for the report.
+    */
+  def qualityConstraints(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(spark, dir, "documents")
+    val langSet = Seq("en", "de", "fr", "es", "zh")
+    val wide = docs.agg(
+      count(lit(1)).as("n"),
+      count(col("doc_id")).as("p_doc"),
+      countDistinct(col("doc_id")).as("d_doc"),
+      count(col("text")).as("p_text"),
+      count(col("lang")).as("p_lang"),
+      sum(when(col("lang").isin(langSet: _*), 1L).otherwise(0L))
+        .as("lang_in"),
+      sum(when(col("n_chars").isNotNull && col("text").isNotNull,
+        1L).otherwise(0L)).as("both"),
+      sum(when(col("n_chars") === length(col("text")), 1L).otherwise(0L))
+        .as("consistent"),
+      min(col("n_chars")).as("min_nc"),
+      max(col("n_chars")).as("max_nc"))
+    // every ratio is GATED before it is computed: under ANSI (the
+    // Spark 4 default) 0/0 throws, and an empty table must yield null
+    // verdicts, not a crashed audit
+    val checks = wide.select(col("*"),
+      when(col("n") > 0L,
+        r4(col("p_doc").cast("double") / col("n"))).as("m1"),
+      (col("p_doc") === col("n")).as("ok1"),
+      when(col("p_doc") > 0L,
+        r4(col("d_doc").cast("double") / col("p_doc"))).as("m2"),
+      (col("d_doc") === col("p_doc")).as("ok2"),
+      when(col("n") > 0L,
+        r4(col("p_text").cast("double") / col("n"))).as("m3"),
+      (col("p_text") * 100L >= col("n") * 99L).as("ok3"),
+      when(col("p_lang") > 0L,
+        r4(col("lang_in").cast("double") / col("p_lang"))).as("m4"),
+      (col("lang_in") === col("p_lang")).as("ok4"),
+      when(col("both") > 0L,
+        r4(col("consistent").cast("double") / col("both"))).as("m5"),
+      (col("consistent") === col("both")).as("ok5"),
+      col("min_nc").cast("double").as("m6"),
+      (col("min_nc") >= 100L).as("ok6"),
+      col("max_nc").cast("double").as("m7"),
+      (col("max_nc") <= 100000L).as("ok7"))
+    checks.selectExpr("n",
+      """stack(7,
+        |  'completeness_doc_id', m1, 1.0D, ok1,
+        |  'uniqueness_doc_id', m2, 1.0D, ok2,
+        |  'completeness_text', m3, 0.99D, ok3,
+        |  'containment_lang', m4, 1.0D, ok4,
+        |  'consistency_n_chars', m5, 1.0D, ok5,
+        |  'min_length_floor', m6, 100.0D, ok6,
+        |  'max_length_cap', m7, 100000.0D, ok7
+        |) as (check_name, metric, threshold, passed)""".stripMargin)
+      .select(col("check_name"),
+        when(col("n") > 0L, col("metric")).as("metric"),
+        col("threshold"),
+        when(col("n") > 0L, col("passed")).as("passed"))
+      .orderBy("check_name")
+  }
+
+  val qualityConstraintsSql: String =
+    s"""WITH w AS (
+       |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+       |    CAST(COUNT(doc_id) AS BIGINT) AS p_doc,
+       |    CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS d_doc,
+       |    CAST(COUNT(text) AS BIGINT) AS p_text,
+       |    CAST(COUNT(lang) AS BIGINT) AS p_lang,
+       |    CAST(COUNT(*) FILTER (WHERE lang IN
+       |      ('en','de','fr','es','zh')) AS BIGINT) AS lang_in,
+       |    CAST(COUNT(*) FILTER (WHERE n_chars IS NOT NULL
+       |      AND text IS NOT NULL) AS BIGINT) AS nboth,
+       |    CAST(COUNT(*) FILTER (WHERE n_chars = length(text))
+       |      AS BIGINT) AS consistent,
+       |    MIN(n_chars) AS min_nc, MAX(n_chars) AS max_nc
+       |  FROM documents),
+       |c AS (
+       |  SELECT 'completeness_doc_id' AS check_name,
+       |    ${r4Sql("CAST(p_doc AS DOUBLE) / n")} AS metric,
+       |    1.0 AS threshold, p_doc = n AS passed, n FROM w
+       |  UNION ALL SELECT 'uniqueness_doc_id',
+       |    ${r4Sql("CAST(d_doc AS DOUBLE) / p_doc")}, 1.0,
+       |    d_doc = p_doc, n FROM w
+       |  UNION ALL SELECT 'completeness_text',
+       |    ${r4Sql("CAST(p_text AS DOUBLE) / n")}, 0.99,
+       |    p_text * 100 >= n * 99, n FROM w
+       |  UNION ALL SELECT 'containment_lang',
+       |    ${r4Sql("CAST(lang_in AS DOUBLE) / p_lang")}, 1.0,
+       |    lang_in = p_lang, n FROM w
+       |  UNION ALL SELECT 'consistency_n_chars',
+       |    ${r4Sql("CAST(consistent AS DOUBLE) / nboth")}, 1.0,
+       |    consistent = nboth, n FROM w
+       |  UNION ALL SELECT 'min_length_floor',
+       |    CAST(min_nc AS DOUBLE), 100.0, min_nc >= 100, n FROM w
+       |  UNION ALL SELECT 'max_length_cap',
+       |    CAST(max_nc AS DOUBLE), 100000.0, max_nc <= 100000, n FROM w)
+       |SELECT check_name,
+       |  CASE WHEN n > 0 THEN metric END AS metric, threshold,
+       |  CASE WHEN n > 0 THEN passed END AS passed
+       |FROM c ORDER BY check_name""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "quality_rule_shapley" -> (qualityRuleShapley _),
+    "quality_profile" -> (qualityProfile _),
+    "quality_constraints" -> (qualityConstraints _),
     "events_cooccurrence" -> (eventsCooccurrence _),
     "text_pii_scrub" -> (textPiiScrub _),
     "text_pii_luhn" -> (textPiiLuhn _),
@@ -492,6 +810,9 @@ object Quality {
     "events_anomaly" -> (eventsAnomaly _))
 
   val oracles: Map[String, String] = Map(
+    "quality_rule_shapley" -> qualityRuleShapleySql,
+    "quality_profile" -> qualityProfileSql,
+    "quality_constraints" -> qualityConstraintsSql,
     "events_cooccurrence" -> eventsCooccurrenceSql,
     "text_pii_scrub" -> textPiiScrubSql,
     "text_pii_luhn" -> textPiiLuhnSql,

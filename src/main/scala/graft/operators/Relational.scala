@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Exprs, Tables}
 import graft.Exprs.{r4, r4Sql, sumDec, sumDecSql}
@@ -12,6 +13,8 @@ import graft.Exprs.{r4, r4Sql, sumDec, sumDecSql}
   * (`region`, `nation`) get explicit broadcast hints — they stay small at
   * any catalog scale; fact-fact joins (lineitem⋈orders) shuffle on their
   * keys and rely on AQE for runtime re-planning at cluster scale.
+  * The Pareto skyline (#287) is a sweep over the price domain, not a
+  * global sort of the fact table.
   */
 object Relational {
 
@@ -588,7 +591,66 @@ object Relational {
       |WINDOW w AS (PARTITION BY p_brand ORDER BY p_size)
       |ORDER BY p_brand, p_partkey""".stripMargin
 
+  // --------------------------------------------------------------- #287
+  /** #287 Pareto skyline of parts: the non-dominated set under
+    * (minimize retail price, maximize size) — no other part is both
+    * cheaper-or-equal and larger-or-equal with one strict. The
+    * multi-objective shortlist read (cheapest part at every size
+    * frontier) that BI suites ship as SKYLINE.
+    *
+    * Exactness: prices clear to integer cents (the #231 floor device),
+    * so dominance is integer-only. Survival: a part survives iff its
+    * size strictly exceeds the best size at any strictly lower price
+    * AND equals the best size at its own price (price-tied parts with
+    * the same size are mutually non-dominated and all survive).
+    *
+    * Scale: one keyed agg to the per-cents best-size table (bounded by
+    * the PRICE DOMAIN, not the part count), ONE ordered window over
+    * that domain-sized table for the running best, and a broadcast
+    * join back — the data-sized pass never sorts globally. This is the
+    * standard 2D skyline sweep; higher dimensions go through repeated
+    * sweeps or a grid prune, same domain-bounded shape.
+    */
+  def partsSkyline(spark: SparkSession, dir: String): DataFrame = {
+    val p = Tables(spark, dir, "part")
+      .select(col("p_partkey"), col("p_brand"),
+        col("p_size").cast("long").as("size"),
+        expr("cast(floor(p_retailprice * 100.0 + 0.5) as bigint)")
+          .as("cents"))
+    val best = p.groupBy("cents").agg(max("size").as("best_size"))
+    val w = Window.orderBy("cents")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    // runs over the price-DOMAIN-sized table (≤ distinct cents rows)
+    val frontier = best
+      .withColumn("best_below", max("best_size").over(w))
+    p.join(broadcast(frontier), "cents")
+      .where(col("size") === col("best_size") &&
+        (col("best_below").isNull || col("size") > col("best_below")))
+      .select(col("p_partkey"), col("p_brand"), col("size"), col("cents"))
+      .orderBy("cents", "p_partkey")
+  }
+
+  val partsSkylineSql: String =
+    """WITH p AS (
+      |  SELECT p_partkey, p_brand, CAST(p_size AS BIGINT) AS size,
+      |    CAST(FLOOR(p_retailprice * 100.0 + 0.5) AS BIGINT) AS cents
+      |  FROM part),
+      |best AS (
+      |  SELECT cents, MAX(size) AS best_size FROM p GROUP BY cents),
+      |fr AS (
+      |  SELECT cents, best_size,
+      |    MAX(best_size) OVER (ORDER BY cents
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+      |      AS best_below
+      |  FROM best)
+      |SELECT p.p_partkey, p.p_brand, p.size, p.cents
+      |FROM p JOIN fr USING (cents)
+      |WHERE p.size = fr.best_size
+      |  AND (fr.best_below IS NULL OR p.size > fr.best_below)
+      |ORDER BY p.cents, p.p_partkey""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "parts_skyline" -> (partsSkyline _),
     "q6_forecast_revenue" -> (q6ForecastRevenue _),
     "window_dense_rank" -> (windowDenseRank _),
     "q1_pricing_summary" -> (q1PricingSummary _),
@@ -608,6 +670,7 @@ object Relational {
     "agg_stats" -> (aggStats _))
 
   val oracles: Map[String, String] = Map(
+    "parts_skyline" -> partsSkylineSql,
     "q6_forecast_revenue" -> q6Sql,
     "window_dense_rank" -> windowDenseRankSql,
     "q1_pricing_summary" -> q1Sql,

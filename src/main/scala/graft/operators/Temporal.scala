@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.Exprs.{sumDec, sumDecSql}
+import graft.Exprs.{r4, r4Sql, sumDec, sumDecSql}
 
 /** Temporal operators: as-of / range joins, windows, sessionization,
   * tumbling aggregation (SURVEY.md §2 #10-11, #16-21).
@@ -18,6 +18,8 @@ import graft.Exprs.{sumDec, sumDecSql}
   *
   * All event timestamps are epoch MICROSECONDS ([[Tables.eventsUs]]) so
   * results hash-match the DuckDB oracle's micro-precision timestamps.
+  * Robust trends (#288 Theil-Sen) run on the span-sized daily series,
+  * never on event-volume pairs.
   */
 object Temporal {
 
@@ -537,7 +539,101 @@ object Temporal {
       |  purchase_us - view_us AS lag_us
       |FROM j WHERE rn = 1 ORDER BY purchase_id""".stripMargin
 
+  // --------------------------------------------------------------- #288
+  /** #288 Theil-Sen robust trend per event type over the daily count
+    * series: the median of all pairwise slopes (y_j−y_i)/(d_j−d_i),
+    * with the intercept as the median residual y_i − slope·d_i. A
+    * single wild day shifts #142's least-squares slope arbitrarily;
+    * the pairwise-median estimator has a 29% breakdown point — the
+    * robust read an ops dashboard wants next to the OLS one.
+    *
+    * Determinism: daily counts are exact integers; each slope is ONE
+    * IEEE division of exact int64s (identical on both engines), so
+    * the (slope, i, j) total order — and therefore the lower-median
+    * pick at rank ⌈n/2⌉ — is engine-identical; same for residuals.
+    *
+    * Scale: the dense axis is SPAN-sized (days), so the pair
+    * explosion is span²-bounded per type — a fixed-horizon constant,
+    * never event-volume-quadratic; everything after the one
+    * events→daily agg runs on domain-sized tables.
+    */
+  def tsTheilSen(spark: SparkSession, dir: String): DataFrame = {
+    val dayUs = 86400000000L
+    // the daily table is referenced 3× (both pair sides + residuals);
+    // unlike the graph family's DATA-sized edge caches (where the idle
+    // A/B favors parallel recompute), this subplan reduces to a
+    // SPAN-sized handful of rows behind a full events scan — persist
+    // is unambiguous: one scan instead of three at any scale, and the
+    // materialization barrier costs a ~|types|·days-row cache
+    val daily = Tables.persistSlot("temporal.theilSen.daily",
+      Tables.eventsUs(spark, dir)
+        .groupBy(col("event_type"),
+          expr(s"ts_us div $dayUs").as("d"))
+        .agg(count(lit(1)).as("y")))
+    val pairs = daily.as("a")
+      .join(daily.as("b"),
+        col("a.event_type") === col("b.event_type") &&
+          col("a.d") < col("b.d"))
+      .select(col("a.event_type").as("event_type"),
+        col("a.d").as("di"), col("a.y").as("yi"),
+        ((col("b.y") - col("a.y")).cast("double") /
+          (col("b.d") - col("a.d")).cast("double")).as("slope"),
+        col("b.d").as("dj"))
+    val ws = Window.partitionBy("event_type")
+      .orderBy("slope", "di", "dj")
+    val slope = pairs
+      .withColumn("rn", row_number().over(ws))
+      .withColumn("np", count(lit(1)).over(Window.partitionBy("event_type")))
+      .where(col("rn") === ceil(col("np").cast("double") / 2).cast("long"))
+      .select(col("event_type"), col("slope"), col("np").as("n_pairs"))
+    val resid = daily.join(slope, "event_type")
+      .select(col("event_type"), col("slope"), col("n_pairs"),
+        (col("y").cast("double") - col("slope") * col("d")).as("r"),
+        col("d"))
+    val wr = Window.partitionBy("event_type").orderBy("r", "d")
+    resid
+      .withColumn("rn", row_number().over(wr))
+      .withColumn("nd", count(lit(1)).over(Window.partitionBy("event_type")))
+      .where(col("rn") === ceil(col("nd").cast("double") / 2).cast("long"))
+      .select(col("event_type"), col("nd").as("n_days"), col("n_pairs"),
+        r4(col("slope")).as("slope"), r4(col("r")).as("intercept"))
+      .orderBy("event_type")
+  }
+
+  val tsTheilSenSql: String =
+    s"""WITH daily AS (
+       |  SELECT event_type, epoch_us(ts) // 86400000000 AS d,
+       |    CAST(COUNT(*) AS BIGINT) AS y
+       |  FROM events GROUP BY 1, 2),
+       |pairs AS (
+       |  SELECT a.event_type, a.d AS di, a.y AS yi,
+       |    CAST(b.y - a.y AS DOUBLE) / (b.d - a.d) AS slope, b.d AS dj
+       |  FROM daily a JOIN daily b
+       |    ON a.event_type = b.event_type AND a.d < b.d),
+       |sl AS (
+       |  SELECT event_type, slope, np AS n_pairs FROM (
+       |    SELECT event_type, slope,
+       |      ROW_NUMBER() OVER (PARTITION BY event_type
+       |        ORDER BY slope, di, dj) AS rn,
+       |      COUNT(*) OVER (PARTITION BY event_type) AS np
+       |    FROM pairs)
+       |  WHERE rn = CAST(CEIL(CAST(np AS DOUBLE) / 2) AS BIGINT)),
+       |res AS (
+       |  SELECT d.event_type, sl.slope, sl.n_pairs,
+       |    CAST(d.y AS DOUBLE) - sl.slope * d.d AS r, d.d
+       |  FROM daily d JOIN sl ON d.event_type = sl.event_type)
+       |SELECT event_type, nd AS n_days, n_pairs,
+       |  ${r4Sql("slope")} AS slope, ${r4Sql("r")} AS intercept
+       |FROM (
+       |  SELECT event_type, slope, n_pairs, r,
+       |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY r, d) AS rn,
+       |    COUNT(*) OVER (PARTITION BY event_type) AS nd
+       |  FROM res)
+       |WHERE rn = CAST(CEIL(CAST(nd AS DOUBLE) / 2) AS BIGINT)
+       |ORDER BY event_type""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "ts_theil_sen" -> (tsTheilSen _),
     "window_running_distinct" -> (windowRunningDistinct _),
     "events_asof_conversion" -> (eventsAsofConversion _),
     "orders_backlog" -> (ordersBacklog _),
@@ -555,6 +651,7 @@ object Temporal {
     "ts_tumbling" -> (tsTumbling _))
 
   val oracles: Map[String, String] = Map(
+    "ts_theil_sen" -> tsTheilSenSql,
     "window_running_distinct" -> windowRunningDistinctSql,
     "events_asof_conversion" -> eventsAsofConversionSql,
     "orders_backlog" -> ordersBacklogSql,

@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Apex
+import graft.operators.{Layout, Multimodal, Quality, Relational, Temporal}
 
-/** Round-14 operator invariants (#287-290). */
+/** Invariants of #287-292 and #320: the skyline, Theil-Sen, Shapley
+  * and perceptual-hash operators and the first layout audits.
+  */
 class ApexSpec extends GraftSpec {
 
   test("parts_skyline: output is mutually non-dominated and dominates " +
@@ -14,7 +16,7 @@ class ApexSpec extends GraftSpec {
           .as("cents"),
         col("p_size").cast("long").as("size"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val sky = Apex.partsSkyline(spark, sf).collect()
+    val sky = Relational.partsSkyline(spark, sf).collect()
       .map(r => (r.getAs[Long]("p_partkey"), r.getAs[Long]("cents"),
         r.getAs[Long]("size")))
     assert(sky.nonEmpty)
@@ -37,7 +39,7 @@ class ApexSpec extends GraftSpec {
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1)
-    val out = Apex.tsTheilSen(spark, sf).collect()
+    val out = Temporal.tsTheilSen(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val t = r.getAs[String]("event_type")
@@ -55,7 +57,7 @@ class ApexSpec extends GraftSpec {
 
   test("quality_rule_shapley: shares are non-negative and conserve the " +
       "overall drop rate") {
-    val out = Apex.qualityRuleShapley(spark, sf).collect()
+    val out = Quality.qualityRuleShapley(spark, sf).collect()
     assert(out.length == 4)
     val shares = out.map(_.getAs[Double]("drop_share"))
     shares.foreach(s => assert(s >= 0.0))
@@ -72,7 +74,7 @@ class ApexSpec extends GraftSpec {
 
   test("layout_partition_advisor: every candidate accounts for the " +
       "same row total; skew >= 1") {
-    val rows = Apex.layoutPartitionAdvisor(spark, sf).collect()
+    val rows = Layout.layoutPartitionAdvisor(spark, sf).collect()
     assert(rows.map(_.getAs[String]("candidate")).sorted.toSeq ==
       Seq("month", "priority", "status", "year"))
     val totals = rows.map(_.getAs[Long]("n_rows")).distinct
@@ -86,7 +88,7 @@ class ApexSpec extends GraftSpec {
 
   test("layout_skipping_audit: the date-clustered layout never skips " +
       "fewer files than insertion order, file accounting consistent") {
-    val rows = Apex.layoutSkippingAudit(spark, sf).collect()
+    val rows = Layout.layoutSkippingAudit(spark, sf).collect()
     assert(rows.length == 6)
     rows.groupBy(_.getAs[String]("probe")).foreach { case (p, rs) =>
       val byLayout = rs.map(r =>
@@ -100,7 +102,7 @@ class ApexSpec extends GraftSpec {
 
   test("mm_image_phash: real-decode signature matches the closed form; " +
       "sparse noise stays within a small hamming radius") {
-    val out = Apex.mmImagePhash(spark, sf)
+    val out = Multimodal.mmImagePhash(spark, sf)
       .where(col("doc_id") < 30).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -136,17 +138,13 @@ class ApexSpec extends GraftSpec {
         datediff(col("o_orderdate"), lit("1970-01-01")).cast("long")
           .as("day"),
         date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-    o.repartition(col("month"))
-      .sortWithinPartitions("month", "day", "o_orderkey")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", 512L)
-      .partitionBy("month")
-      .parquet(tmp)
-    val real = Apex.readFooterDayStats(spark, tmp)
+    Layout.writeClustered(o, tmp, "month", "day", 512L)
+    val real = try Layout.readFooterDayStats(spark, tmp)
       .collect()
       .map(r => (r.getAs[String]("month"), r.getAs[Long]("min_day"),
         r.getAs[Long]("max_day"), r.getAs[Long]("n_rows")))
       .sorted.toSeq
+    finally deleteTempLayout(tmp)
     val sim = o
       .withColumn("fid", expr("(row_number() over (partition by month " +
         "order by day, o_orderkey) - 1) div 512"))

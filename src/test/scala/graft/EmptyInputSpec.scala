@@ -226,6 +226,8 @@ class EmptyInputSpec extends AnyFunSuite {
     "ann_ivf_incremental",  // frozen centroids of no vectors
     "url_host_rollup",      // host gate over no canonicals
     "layout_rowgroup_scan", // zero-file write, zero surviving groups
+    "layout_pruned_scan",   // zero-file write, zero surviving files
+    "layout_hilbert_footer", // two zero-file writes, no probes read
     // round-20 batch 2 (#338-341)
     "er_blocking_eval",     // five keys scored over an empty master
     "events_drift_chi2",    // no cells -> no per-type rows (never 0/0)
@@ -366,6 +368,14 @@ class EmptyInputSpec extends AnyFunSuite {
         assert(rows.length == 1)
         assert(rows.head.getAs[Long]("files_total") == 0L)
         assert(rows.head.getAs[Long]("n_rows") == 0L)
+        assert(rows.head.isNullAt(rows.head.fieldIndex("min_day_read")))
+      } else if (name == "layout_pruned_scan") {
+        // global agg: no files to prune, so no skip share (never 0/0)
+        assert(rows.length == 1)
+        assert(rows.head.getAs[Long]("files_total") == 0L)
+        assert(rows.head.getAs[Long]("files_read") == 0L)
+        assert(rows.head.getAs[Long]("n_rows") == 0L)
+        assert(rows.head.isNullAt(rows.head.fieldIndex("skip_frac")))
         assert(rows.head.isNullAt(rows.head.fieldIndex("min_day_read")))
       } else assert(rows.isEmpty, s"$name emitted ${rows.length} rows")
     }

@@ -1,14 +1,16 @@
 package graft
 
-import graft.operators.Forge
+import graft.operators.{Analytics, Layout, Quality}
 
-/** Round-19 widening invariants. */
+/** Invariants of the footer-measured layouts (#324-#350) and of the
+  * profiling and sampling operators (#326, #327, #342).
+  */
 class ForgeSpec extends GraftSpec {
 
   test("layout_zorder_footer: z-order skips on BOTH dimensions where " +
       "the single-key layout only skips on its sort key — measured " +
       "from REAL footers") {
-    val rows = Forge.layoutZorderFooter(spark, sf).collect()
+    val rows = Layout.layoutZorderFooter(spark, sf).collect()
       .map(r => (r.getAs[String]("layout"), r.getAs[String]("probe")) ->
         r.getAs[Double]("skip_frac")).toMap
     assert(rows.size == 6)
@@ -43,7 +45,7 @@ class ForgeSpec extends GraftSpec {
       if (hs.length < 256) hs.length.toDouble
       else 255.0 / (hs(255).toDouble / 1.8446744073709552E19)
     }
-    val out = Forge.qualityProfile(spark, sf).collect()
+    val out = Quality.qualityProfile(spark, sf).collect()
       .map(r => r.getAs[String]("col_name") -> r).toMap
     assert(out.keySet ==
       Set("doc_id", "lang", "source", "n_chars", "text"))
@@ -89,7 +91,7 @@ class ForgeSpec extends GraftSpec {
       "min-length floor fails on this corpus)") {
     import org.apache.spark.sql.functions._
     val docs = Tables(spark, sf, "documents").collect()
-    val out = Forge.qualityConstraints(spark, sf).collect()
+    val out = Quality.qualityConstraints(spark, sf).collect()
       .map(r => r.getAs[String]("check_name") -> r).toMap
     assert(out.size == 7)
     val n = docs.length.toLong
@@ -128,7 +130,7 @@ class ForgeSpec extends GraftSpec {
     import org.apache.spark.sql.functions.{col, expr}
     val grid = (0 until 64).flatMap(x => (0 until 64).map(y =>
       (x.toLong, y.toLong))).toDF("db", "cb")
-    val (steps, dFinal) = Forge.hilbertSteps("db", "cb")
+    val (steps, dFinal) = Layout.hilbertSteps("db", "cb")
     val cells = steps.foldLeft(grid) { case (df, (c, e)) =>
         df.withColumn(c, expr(e)) }
       .select(col("db"), col("cb"), col(dFinal).cast("long").as("hd"))
@@ -146,16 +148,15 @@ class ForgeSpec extends GraftSpec {
       "row-IDENTICAL to the full scan on BOTH layouts, and genuinely " +
       "reads fewer files") {
     import org.apache.spark.sql.functions._
-    val fileRows = 512
     // wider day band than the operator's probe: sf0.001 has ~1500
     // orders and the 31-day band × 1/64 bucket is empty there — the
     // identity must be checked on a NON-vacuous match set
     val (dLo, dHi, cV) = (9000L, 9400L, 7L)
-    val o = Forge.ordersZFrame(spark, sf)
+    val o = Layout.ordersZFrame(spark, sf)
     def prunedEqualsFull(write: org.apache.spark.sql.DataFrame => String)
         : (Long, Long) = {
       val tmp = write(o)
-      val stats = Forge.footerTwoDimStats(spark, tmp, "t").collect()
+      val stats = Layout.footerTwoDimStats(spark, tmp, "t").collect()
       val survivors = stats.filter { r =>
         r.getAs[Long]("max_day") >= dLo &&
           r.getAs[Long]("min_day") <= dHi &&
@@ -174,29 +175,19 @@ class ForgeSpec extends GraftSpec {
           "or prune predicate wrong")
       assert(full.nonEmpty, "probe matched nothing — vacuous identity")
       org.apache.spark.sql.functions.lit(1) // keep imports used
-      operators.Apex.deleteTempLayout(spark, tmp)
+      deleteTempLayout(tmp)
       (survivors.length.toLong, stats.length.toLong)
     }
-    val (zRead, zTotal) = prunedEqualsFull { df =>
-      val t = java.nio.file.Files
-        .createTempDirectory("graft_prune_z").toString
-      df.repartition(col("zb"))
-        .sortWithinPartitions("zb", "z", "o_orderkey")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", fileRows.toLong)
-        .partitionBy("zb").parquet(t)
+    def clustered(name: String, part: String, key: String)(
+        df: org.apache.spark.sql.DataFrame): String = {
+      val t = java.nio.file.Files.createTempDirectory(name).toString
+      Layout.writeClustered(df, t, part, key, 512L)
       t
     }
-    val (dRead, dTotal) = prunedEqualsFull { df =>
-      val t = java.nio.file.Files
-        .createTempDirectory("graft_prune_d").toString
-      df.repartition(col("month"))
-        .sortWithinPartitions("month", "day", "o_orderkey")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", fileRows.toLong)
-        .partitionBy("month").parquet(t)
-      t
-    }
+    val (zRead, zTotal) =
+      prunedEqualsFull(clustered("graft_prune_z", "zb", "z"))
+    val (dRead, dTotal) =
+      prunedEqualsFull(clustered("graft_prune_d", "month", "day"))
     // the executor must actually skip — on the z-order layout the
     // combined probe reads a small fraction of the files
     assert(zRead < zTotal && zRead.toDouble / zTotal <= 0.5,
@@ -208,9 +199,9 @@ class ForgeSpec extends GraftSpec {
       "are genuinely skipped INSIDE kept files, and the selective " +
       "row-group read is row-identical to the full scan") {
     import org.apache.spark.sql.functions._
-    val tmp = Forge.writeRowGroupDateLayout(spark, sf)
+    val tmp = Layout.writeRowGroupDateLayout(spark, sf)
     try {
-      val rg = operators.Apex.readFooterRowGroupStats(spark, tmp, "day")
+      val rg = ParquetFiles.readFooterRowGroupStats(spark, tmp, "day")
         .collect()
       val perFile = rg.groupBy(_.getAs[String]("path"))
       // the 4 KiB block size genuinely rolls many row groups per file
@@ -233,7 +224,7 @@ class ForgeSpec extends GraftSpec {
       // identity: selective read + residual filter == full scan + filter
       val survivors = survByFile.map { case (p, rows) =>
         (p, rows.map(_.getAs[Int]("rg_idx")).sorted.toSeq) }.toSeq
-      val got = operators.Apex.readSelectedRowGroups(spark, survivors)
+      val got = Layout.readSelectedRowGroups(spark, survivors)
         .where(col("day").between(dLo, dHi))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val full = spark.read.parquet(tmp)
@@ -296,7 +287,7 @@ class ForgeSpec extends GraftSpec {
       Seq((l, "day") -> sweep(fs.map(f => (f._1, f._2))),
         (l, "cb") -> sweep(fs.map(f => (f._3, f._4))))
     }
-    val out = Forge.layoutOverlapDepth(spark, sf).collect()
+    val out = Layout.layoutOverlapDepth(spark, sf).collect()
     assert(out.length == 4)
     out.foreach { r =>
       val k = (r.getAs[String]("layout"), r.getAs[String]("dim"))
@@ -330,7 +321,7 @@ class ForgeSpec extends GraftSpec {
       val hex = d.map("%02x".format(_)).mkString.take(8)
       java.lang.Long.parseLong(hex, 16).toDouble / 4294967296.0
     }
-    val out = Forge.samplePps(spark, sf).collect()
+    val out = Analytics.samplePps(spark, sf).collect()
     val byType = events.groupBy(_._2)
     assert(out.length == byType.size)
     out.foreach { r =>
@@ -366,7 +357,7 @@ class ForgeSpec extends GraftSpec {
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("m"))
       .count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val out = Forge.layoutCompactFiles(spark, sf).collect()
+    val out = Layout.layoutCompactFiles(spark, sf).collect()
     assert(out.length == monthCounts.size)
     out.foreach { r =>
       val m = r.getAs[String]("month")
@@ -392,10 +383,10 @@ class ForgeSpec extends GraftSpec {
       "files than zone maps, and the pruned lookup matches the direct " +
       "filter") {
     import org.apache.spark.sql.functions._
-    val keys = Forge.bloomProbeKeys(spark, sf)
+    val keys = Layout.bloomProbeKeys(spark, sf)
     assert(keys.length == 3)
-    val tmp = Forge.writeBloomDateLayout(spark, sf)
-    val audit = operators.Apex
+    val tmp = Layout.writeBloomDateLayout(spark, sf)
+    val audit = ParquetFiles
       .readFooterBloomAudit(spark, tmp, "o_custkey", keys).collect()
     assert(audit.nonEmpty)
     assert(audit.forall(_.getAs[Boolean]("has_bloom")),
@@ -425,7 +416,7 @@ class ForgeSpec extends GraftSpec {
         "probe keys no longer exercise the bloom argument")
     assert(bloomRead * 2 < zmRead,
       s"blooms read $bloomRead vs zone maps $zmRead - no real win")
-    val out = Forge.layoutBloomScan(spark, sf).collect()
+    val out = Layout.layoutBloomScan(spark, sf).collect()
     assert(out.length == 3)
     val direct = Tables(spark, sf, "orders")
       .where(col("o_custkey").isin(keys: _*))
@@ -448,7 +439,7 @@ class ForgeSpec extends GraftSpec {
       "and row counts are conserved") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
-    val tmp = Forge.writeSchemaEvolutionLayout(spark, sf)
+    val tmp = Layout.writeSchemaEvolutionLayout(spark, sf)
     def physicalFields(sub: String): Set[String] = {
       val hconf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(s"$tmp/$sub")
@@ -460,11 +451,9 @@ class ForgeSpec extends GraftSpec {
         if (p.getName.endsWith(".parquet")) f = p
       }
       assert(f != null, s"no data file under $sub")
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf))
-      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName).toSet
-      finally reader.close()
+      ParquetFiles.withReader(f.toString, hconf)(
+        _.getFooter.getFileMetaData.getSchema.getFields.asScala
+          .map(_.getName).toSet)
     }
     assert(!physicalFields("epoch=1").contains("price_cents"),
       "epoch-1 files unexpectedly carry the late column - " +

@@ -28,4 +28,12 @@ object TestSpark {
 abstract class GraftSpec extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** Delete a spec-owned temp layout (cache-owned trees are deleted by
+    * [[LayoutCache]] instead).
+    */
+  protected def deleteTempLayout(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 }

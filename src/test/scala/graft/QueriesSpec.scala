@@ -21,6 +21,8 @@ class QueriesSpec extends GraftSpec {
     assert(shared(modules.map(_._1.keySet)).isEmpty)
     assert(shared(modules.map(_._2.keySet)).isEmpty)
     assert(modules.map(_._1.size).sum == SparkEntry.queries.size)
+    // a query cannot move between modules without its oracle
+    modules.foreach { case (q, o) => assert(q.keySet == o.keySet) }
   }
 
   test("entry smoke query returns rows") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Forge
+import graft.operators.Analytics
 
 /** The 7th sketch: the bottom-k sample must be a pure set function of
   * the input — identical under any partitioning, idempotent under
@@ -88,7 +88,7 @@ class SampleSketchSpec extends GraftSpec {
 
   test("estimate-vs-exact eval: sample means land near exact means " +
       "(the 32-sample error bound) and sample accounting is exact") {
-    val out = Forge.sampleBottomk(spark, sf).collect()
+    val out = Analytics.sampleBottomk(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val n = r.getAs[Long]("n")

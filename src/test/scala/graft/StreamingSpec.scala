@@ -722,7 +722,7 @@ class StreamingSpec extends GraftSpec {
       .agg(count(lit(1)).as("sample_n"), sum("c").as("sample_sum_cents"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val batchRef = operators.Forge.sampleBottomk(spark, sf)
+    val batchRef = operators.Analytics.sampleBottomk(spark, sf)
       .select("event_type", "sample_n", "sample_sum_cents")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -1443,7 +1443,7 @@ class StreamingSpec extends GraftSpec {
       }
     }
     def r4d(x: Double): Double = math.floor(x * 10000.0 + 0.5) / 10000.0
-    val batchProf = operators.Forge.qualityProfile(spark, sf).collect()
+    val batchProf = operators.Quality.qualityProfile(spark, sf).collect()
       .map(r => r.getAs[String]("col_name") -> r).toMap
     def check(c: String, loS: => String, hiS: => String): Unit = {
       val r = batchProf(c)
