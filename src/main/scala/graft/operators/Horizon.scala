@@ -1199,22 +1199,25 @@ object Horizon {
     * explode of the SCORED pair table (structure-sized).
     */
   def dedupThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    // multi-branch consumer of the shared scored-candidate table —
-    // reads the LayoutCache parquet (r12), so the three downstream
-    // branches re-scan a tiny file instead of re-running the
-    // shingle→signature→banding→attach pipeline (the r11 4× outlier)
+    // reads the shared scored-candidate table from its LayoutCache
+    // parquet (r12) instead of re-running the shingle→signature→
+    // banding→attach pipeline (the r11 4× outlier)
     val scored = portableScoredCached(spark, dir)
       .select(col("id_a"), col("id_b"),
         (col("inter") * 10L).as("i10"), col("uni"))
     // threshold t in tenths: jaccard >= t/10  <=>  10*inter >= t*uni
     // (exact integer comparison — no float boundary)
-    val swept = scored.crossJoin(
+    // each swept pair becomes its two endpoints (side 0 = id_a), so one
+    // keyed agg counts both the distinct documents and the pairs
+    scored.crossJoin(
         broadcast(spark.range(5, 10).select(col("id").as("t"))))
       .where(col("i10") >= col("t") * col("uni"))
-    swept.select(col("t"), col("id_a").as("doc_id"))
-      .union(swept.select(col("t"), col("id_b").as("doc_id")))
-      .groupBy("t").agg(countDistinct("doc_id").as("n_docs"))
-      .join(swept.groupBy("t").agg(count(lit(1)).as("n_pairs")), "t")
+      .select(col("t"),
+        posexplode(array(col("id_a"), col("id_b")))
+          .as(Seq("side", "doc_id")))
+      .groupBy("t")
+      .agg(countDistinct("doc_id").as("n_docs"),
+        count(when(col("side") === 0, true)).as("n_pairs"))
       .select((col("t").cast("double") / 10).as("threshold"),
         col("n_pairs"), col("n_docs"))
       .orderBy("threshold")

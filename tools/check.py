@@ -19,6 +19,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -107,23 +108,26 @@ def main():
             print(f"{'ROWS-OK' if ok else 'ROWS-EMPTY':9s} {name} "
                   f"(no oracle, rows={len(spark_df)})")
             continue
+        t0 = time.monotonic()
         try:
             oracle_df = canon(con.sql(oracles[name]).df())
         except Exception as e:
             n_fail += 1
-            print(f"{'ORACLE-ERR':9s} {name}: {e}")
+            print(f"{'ORACLE-ERR':9s} {name} "
+                  f"oracle_s={time.monotonic() - t0:.2f}: {e}")
             continue
+        oracle_s = f"oracle_s={time.monotonic() - t0:.2f}"
         schema_ok = list(spark_df.columns) == list(oracle_df.columns)
         rows_ok = len(spark_df) == len(oracle_df)
         hash_ok = schema_ok and rows_ok and \
             table_hash(spark_df) == table_hash(oracle_df)
         if hash_ok:
             n_pass += 1
-            print(f"{'PASS':9s} {name} rows={len(spark_df)}")
+            print(f"{'PASS':9s} {name} rows={len(spark_df)} {oracle_s}")
         else:
             n_fail += 1
             print(f"{'FAIL':9s} {name} schema_ok={schema_ok} "
-                  f"rows={len(spark_df)}/{len(oracle_df)}")
+                  f"rows={len(spark_df)}/{len(oracle_df)} {oracle_s}")
             if not schema_ok:
                 print(f"   spark:  {list(spark_df.columns)}")
                 print(f"   oracle: {list(oracle_df.columns)}")
