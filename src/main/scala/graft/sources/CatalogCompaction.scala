@@ -2,8 +2,11 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+import graft.ParquetFiles
 
 /** Catalog compaction: fold the append-only CDC change log back into
   * the partitioned parquet base.
@@ -22,8 +25,9 @@ import org.apache.spark.sql.functions._
   * Change-log contract: the log carries the base's data columns plus
   * `op` ("upsert" | "delete") and a monotone `seq`. `(key, seq)` is
   * unique by construction; at-least-once delivery repeats the SAME
-  * record, so one `distinct()` restores exactly-once (the
-  * IncrementalIndexer redelivery argument).
+  * record, so the fold's `row_number` over `(key, seq desc)` keeps one
+  * of a redelivered record's identical copies — no separate
+  * `distinct()` (a shuffle) is needed for exactly-once.
   *
   * Scale:
   *   - Touched-partition discovery is one key-projected scan of the
@@ -31,19 +35,22 @@ import org.apache.spark.sql.functions._
   *     log's key set — the log is change-sized, so the semi-join
   *     broadcast-gates; partition stats / bloom indexes would skip even
   *     that scan, noted below.
-  *   - Only touched partitions are read in full and rewritten; the
-  *     write uses dynamic partition overwrite so concurrent readers of
-  *     untouched partitions never see a hole.
+  *   - Only touched partitions are read in full, and they are written
+  *     ONCE: into a `.compact-staging` sibling of the base, then
+  *     swapped in per partition by directory rename.
   *   - File sizing: the HARD cap is the writer's `maxRecordsPerFile`
   *     (the task rolls to a new file at the bound); the small-file
   *     bound comes from bucketing keys into ~rows/target shuffle
   *     groups, so a huge partition compacts with many parallel tasks,
-  *     not one.
-  *   - Jobs per run: the touched-partition collect, the staging write,
-  *     one aggregate over the staged copy (surviving partitions and
-  *     the row count that sizes the buckets, together) and the
-  *     overwrite. An empty log touches nothing and stops after the
-  *     first; no separate emptiness probe runs before it.
+  *     not one. The row estimate is an upper bound read from metadata:
+  *     the touched base files' footer row counts plus the pending
+  *     upserts.
+  *   - Jobs per run: the touched-partition collect (it also counts the
+  *     pending upserts per partition) and the staging write. Row counts
+  *     and surviving partitions come from the staging listing and its
+  *     footers, read on the driver. An empty log touches nothing and
+  *     stops after the collect; no separate emptiness probe runs
+  *     before it.
   */
 object CatalogCompaction {
 
@@ -62,7 +69,7 @@ object CatalogCompaction {
     * where the log carries the STRING "1") — the log's record schema
     * is the contract, so the base aligns to it before any union.
     */
-  private def alignToLog(base: DataFrame, log: DataFrame): DataFrame = {
+  private[graft] def alignToLog(base: DataFrame, log: DataFrame): DataFrame = {
     val logTypes = log.schema.fields.map(f => f.name -> f.dataType).toMap
     base.select(base.schema.fields.map { f =>
       col(f.name).cast(logTypes.getOrElse(f.name, f.dataType)).as(f.name)
@@ -71,8 +78,9 @@ object CatalogCompaction {
 
   /** Merge-on-read: base rows rank below every log record (seq -1);
     * the latest seq per key wins; keys whose latest op is a delete
-    * drop. One distinct (redelivery collapse) + one key-partitioned
-    * window — the same shape as `EventStream.cdcState`.
+    * drop. One key-partitioned window — the same shape as
+    * `EventStream.cdcState`; a redelivered record's identical copies
+    * tie on `(key, seq)` and the window keeps one of them.
     */
   def mergeOnRead(base: DataFrame, log: DataFrame, keyCol: String): DataFrame = {
     val aligned = alignToLog(base, log)
@@ -81,8 +89,7 @@ object CatalogCompaction {
       .withColumn("op", lit("upsert"))
       .withColumn("seq", lit(-1L))
     val w = Window.partitionBy(keyCol).orderBy(desc("seq"))
-    asLog.unionByName(log.distinct().select(
-        (dataCols ++ metaCols).map(col): _*))
+    asLog.unionByName(log.select((dataCols ++ metaCols).map(col): _*))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1 && col("op") =!= "delete")
       .select(dataCols.map(col): _*)
@@ -95,91 +102,123 @@ object CatalogCompaction {
     * level-move must vacate its old partition) plus where upserts land.
     * Partitions left empty by deletes are removed. Re-running with the
     * same log is idempotent (the merged state is already the base's
-    * state); running with an empty log rewrites nothing.
+    * state); running with an empty log rewrites nothing. `log` may hold
+    * redelivered copies of a record.
+    *
+    * The merged touched partitions are written once, to a
+    * `.compact-staging` sibling of the base, before the base is
+    * touched: the write's input lineage reads the very files the swap
+    * replaces, and a cache()+count() pin is only a hint — if cached
+    * blocks were evicted or an executor died after the swap,
+    * recomputation would re-read deleted files. The durable staging
+    * copy cuts the lineage at a real file boundary (the same reason
+    * Delta/Iceberg never rewrite in place), and being a SIBLING no read
+    * of the base ever lists it.
+    *
+    * The swap then takes each touched partition in turn: delete the
+    * base's directory, rename the staged one into its place (or leave
+    * it deleted when no row survived). These are the steps of Spark's
+    * dynamic partition overwrite commit, and they share its window: a
+    * reader listing the base between one partition's delete and its
+    * rename sees that partition empty, and a run that stops there
+    * leaves the staged directory as the partition's only copy. The next
+    * run therefore starts by renaming back every partition of a
+    * committed (`_SUCCESS`) stale staging copy whose base directory is
+    * missing, then deletes the rest of it; a staging copy whose write
+    * never committed is deleted unread. Base partitions the stopped run
+    * had not swapped yet keep their old rows, which the pending log
+    * (still unfolded: `CompactionLoop` advances its watermark only
+    * after this returns) overrides on read and on the next fold.
     */
   def compact(spark: SparkSession, basePath: String, log: DataFrame,
       keyCol: String = "doc_id",
       partitionCol: String = "processing_level",
       targetRowsPerFile: Long = 1000000L): CompactStats = {
-    // no separate emptiness probe: an empty log touches no partition
-    // and returns below, before anything is written
-    val logD = log.distinct()
-    val base = alignToLog(spark.read.parquet(basePath), logD)
-    // partitions holding a changed key today (column-pruned scan: only
-    // key + partition columns are read; a production catalog with
-    // partition-level key stats or bloom filters skips the scan)
-    val logKeys = logD.select(col(keyCol)).distinct()
-    val oldParts = base.select(col(keyCol), col(partitionCol))
-      .join(logKeys, Seq(keyCol), "left_semi")
-      .select(col(partitionCol))
-    // partitions upserts land in
-    val newParts = logD.where(col("op") === "upsert")
-      .select(col(partitionCol))
-    val touched = oldParts.unionByName(newParts).distinct()
-      .collect().map(_.get(0).toString).sorted.toSeq
-    if (touched.isEmpty) return CompactStats(Nil, Nil, 0L)
-
-    val baseTouched = base.where(col(partitionCol).isin(touched: _*))
-    val merged = mergeOnRead(baseTouched, logD, keyCol)
-
-    // Materialize the merged state to a STAGING path before touching
-    // the base: the overwrite's input lineage reads the very files the
-    // overwrite replaces, and a cache()+count() pin is only a hint —
-    // if cached blocks are evicted or an executor dies after the
-    // commit, recomputation would re-read overwritten/deleted files
-    // and corrupt the rewrite on a multi-node cluster. A durable
-    // staging copy cuts the lineage at a real file boundary (the same
-    // reason Delta/Iceberg never rewrite in place). The staging dir is
-    // a SIBLING of basePath so no read of the base ever lists it.
     val fs = new Path(basePath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
+    def rename(src: Path, dst: Path): Unit =
+      if (!fs.rename(src, dst))
+        throw new IllegalStateException(s"rename $src -> $dst failed")
+    // finish a stopped run's swap before the base is listed
     val staging = new Path(basePath + ".compact-staging")
+    if (fs.exists(new Path(staging, "_SUCCESS")))
+      fs.listStatus(staging).map(_.getPath)
+        .filter(_.getName.startsWith(s"$partitionCol="))
+        .foreach { src =>
+          val dst = new Path(basePath, src.getName)
+          if (!fs.exists(dst)) rename(src, dst)
+        }
     fs.delete(staging, true)
+
+    val base = alignToLog(spark.read.parquet(basePath), log)
+    // partitions holding a changed key today (column-pruned scan: only
+    // key + partition columns are read; a production catalog with
+    // partition-level key stats or bloom filters skips the scan) and
+    // partitions upserts land in, with each one's upsert count (an
+    // upper bound: redelivered copies count again). No separate
+    // emptiness probe: an empty log touches no partition and returns
+    // below, before anything is written
+    val oldParts = base.select(col(keyCol), col(partitionCol))
+      .join(log.select(col(keyCol)), Seq(keyCol), "left_semi")
+      .select(col(partitionCol), lit(0L).as("ups"))
+    val newParts = log.where(col("op") === "upsert")
+      .select(col(partitionCol), lit(1L).as("ups"))
+    val perPart = oldParts.unionByName(newParts)
+      .groupBy(col(partitionCol)).agg(sum("ups"))
+      .collect().map(r => r.get(0).toString -> r.getLong(1))
+    val touched = perPart.map(_._1).sorted.toSeq
+    if (touched.isEmpty) return CompactStats(Nil, Nil, 0L)
+
+    def dir(root: String, v: String) = new Path(root,
+      ExternalCatalogUtils.getPartitionPathString(partitionCol, v))
+    val rowBound = touched.map(v => footerRows(spark, dir(basePath, v))).sum +
+      perPart.map(_._2).sum
+    val merged = mergeOnRead(
+      base.where(col(partitionCol).isin(touched: _*)), log, keyCol)
     try {
-      merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val staged = spark.read.parquet(staging.toString)
-
-      // one aggregate gives both the surviving partitions and the row
-      // count that sizes the buckets. A touched partition with no
-      // surviving rows is not present in the dynamic overwrite's
-      // output — remove its directory explicitly
-      val perPart = staged.groupBy(col(partitionCol)).count().collect()
-      val survivingParts = perPart.map(_.get(0).toString).toSet
-      val removed = touched.filterNot(survivingParts)
-      val rowsWritten = perPart.map(_.getLong(1)).sum
-
-      writeCompacted(staged, basePath, partitionCol, rowsWritten,
+      writeCompacted(merged, staging.toString, partitionCol, rowBound,
         targetRowsPerFile)
-
-      removed.foreach { v =>
-        fs.delete(new Path(basePath, s"$partitionCol=$v"), true)
+      val (survived, removed) =
+        touched.partition(v => fs.exists(dir(staging.toString, v)))
+      val rowsWritten =
+        survived.map(v => footerRows(spark, dir(staging.toString, v))).sum
+      touched.foreach { v =>
+        fs.delete(dir(basePath, v), true)
+        if (survived.contains(v))
+          rename(dir(staging.toString, v), dir(basePath, v))
       }
       CompactStats(touched, removed, rowsWritten)
     } finally fs.delete(staging, true)
   }
 
-  /** Write the merged state of the touched partitions with dynamic
-    * partition overwrite and bounded files: keys bucket into
+  /** Rows in the parquet files under `dir`, summed from their footers
+    * on the driver (zero when `dir` does not exist).
+    */
+  private def footerRows(spark: SparkSession, dir: Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    ParquetFiles.list(spark, dir.toString).map(ParquetFiles.withReader(_, conf)(
+      _.getFooter.getBlocks.asScala.map(_.getRowCount).sum)).sum
+  }
+
+  /** Write the merged state of the touched partitions, partitioned by
+    * `partitionCol`, with bounded files: keys bucket into
     * ~rows/target shuffle groups (parallel tasks inside one big
     * partition), `maxRecordsPerFile` is the hard per-file cap.
     */
-  private def writeCompacted(staged: DataFrame, basePath: String,
+  private def writeCompacted(merged: DataFrame, path: String,
       partitionCol: String, rows: Long, targetRowsPerFile: Long): Unit = {
-    // `staged` is a parquet read of the staging copy, so the overwrite
-    // below re-reads durable files — no cache pin needed
     val nBuckets = math.max(1L, (rows + targetRowsPerFile - 1) /
       targetRowsPerFile).toInt
-    staged
+    merged
       .withColumn("_bucket",
-        pmod(hash(col(partitionCol) :: staged.columns.map(col).toList: _*),
+        pmod(hash(col(partitionCol) :: merged.columns.map(col).toList: _*),
           lit(nBuckets)))
       .repartition(nBuckets, col(partitionCol), col("_bucket"))
       .drop("_bucket")
       .write
       .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
       .option("maxRecordsPerFile", targetRowsPerFile)
       .partitionBy(partitionCol)
-      .parquet(basePath)
+      .parquet(path)
   }
 }

@@ -24,16 +24,42 @@ import graft.sources.{CatalogCompaction, CatalogIO, CatalogVacuum}
   *  - compaction itself folds only the pending slice, so an
   *    already-folded change can never be re-applied over a newer one.
   *
-  * Layout under one `tableDir`: `base/` (partitioned parquet, the
-  * compacted state), `log/` (append-only change parquet),
-  * `_compacted_through` (the watermark marker, written atomically via
-  * tmp+rename by `CatalogIO.writeAtomically`).
+  * Layout under one `tableDir`:
+  * {{{
+  *   base/<partitionCol>=<v>/…parquet  the compacted state
+  *   log/through=<wm>/…parquet          change records appended while
+  *                                      the watermark read <wm>
+  *   _compacted_through                 the watermark marker, written
+  *                                      atomically (tmp + rename) by
+  *                                      `CatalogIO.writeAtomically`
+  * }}}
+  * Each batch reads the watermark once and appends into the LIVE
+  * segment `log/through=<wm>`, so the pending slice is that one
+  * segment's `seq > wm` rows: a read lists and scans only it, never
+  * the history. A compaction folds the live segment and moves the
+  * watermark to its max seq, so every record in segment `W` has
+  * seq ≤ the next watermark — older segments hold only folded records
+  * and no read opens them. They stay on disk as the raw change
+  * history (`spark.read.parquet(s"$tableDir/log")` reads every
+  * record, with the segment as a `through` column); deleting them is
+  * a retention decision this loop does not make. When the live
+  * segment does not exist yet, nothing is pending and the view is the
+  * base alone, cast to the log's column types so the view's schema
+  * does not depend on whether anything is pending.
+  *
+  * Crash windows: a run that compacts but stops before the marker
+  * write leaves the watermark behind, so the next batch appends to the
+  * same segment and the pending slice re-offers the folded records.
+  * The fold keeps the latest seq per key over base and log, and the
+  * whole segment is still there, so re-applying them yields the same
+  * state. A compaction stopped mid-swap is finished by the next one
+  * (`CatalogCompaction.compact`).
   *
   * Scale: the trigger check is one aggregate query over the pending
   * slice that returns its row count and its max `seq` (the watermark
   * candidate) together (a production loop keeps the pending count in
   * streaming state and skips even that); compaction cost is
-  * CatalogCompaction's touched-partitions-only rewrite.
+  * CatalogCompaction's touched-partitions-only, write-once rewrite.
   */
 object CompactionLoop {
 
@@ -48,43 +74,65 @@ object CompactionLoop {
     CatalogIO.readMarker(spark, s"$tableDir/$marker")
       .map(_.trim.toLong).getOrElse(-1L)
 
-  /** Change records not yet folded into the base (replayed duplicates
-    * of folded batches filter out here — the exactly-once boundary).
-    */
-  def pendingLog(spark: SparkSession, tableDir: String): DataFrame = {
-    val f = fs(spark, tableDir)
-    if (!f.exists(new Path(s"$tableDir/log"))) return null
-    spark.read.parquet(s"$tableDir/log")
-      .where(col("seq") > watermark(spark, tableDir))
+  private def segment(tableDir: String, wm: Long) =
+    new Path(s"$tableDir/log/through=$wm")
+
+  private def pendingIn(spark: SparkSession, tableDir: String,
+      wm: Long): DataFrame = {
+    val seg = segment(tableDir, wm)
+    if (!fs(spark, tableDir).exists(seg)) null
+    else spark.read.parquet(seg.toString).where(col("seq") > wm)
   }
+
+  /** Change records not yet folded into the base: the live segment's
+    * `seq > watermark` rows (replayed duplicates of folded batches
+    * filter out here — the exactly-once boundary); null when the live
+    * segment does not exist, i.e. nothing is pending.
+    */
+  def pendingLog(spark: SparkSession, tableDir: String): DataFrame =
+    pendingIn(spark, tableDir, watermark(spark, tableDir))
 
   /** The merge-on-read view: compacted base + pending changes. */
   def view(spark: SparkSession, tableDir: String,
       keyCol: String = "doc_id"): DataFrame = {
     val base = spark.read.parquet(s"$tableDir/base")
     val pending = pendingLog(spark, tableDir)
-    if (pending == null) base
-    else CatalogCompaction.mergeOnRead(base, pending, keyCol)
+    if (pending != null)
+      CatalogCompaction.mergeOnRead(base, pending, keyCol)
+    else {
+      // nothing pending: the newest folded segment gives the log's types
+      val log = new Path(s"$tableDir/log")
+      val f = fs(spark, tableDir)
+      val segs = if (!f.exists(log)) Array.empty[Path]
+        else f.listStatus(log).map(_.getPath)
+          .filter(_.getName.startsWith("through="))
+      if (segs.isEmpty) base
+      else CatalogCompaction.alignToLog(base, spark.read.parquet(
+        segs.maxBy(_.getName.stripPrefix("through=").toLong).toString))
+    }
   }
 
   /** Process one micro-batch of change records (data cols + op + seq):
-    * append to the log, then compact iff the pending slice reached
-    * `threshold` rows. Returns true when a compaction ran.
+    * append to the live log segment, then compact iff the pending slice
+    * reached `threshold` rows (a redelivered record counts once). A
+    * threshold ≤ 0 compacts on every batch that leaves anything
+    * pending; with nothing pending there is nothing to fold. Returns
+    * true when a compaction ran.
     */
   def onBatch(spark: SparkSession, tableDir: String, batch: DataFrame,
       threshold: Long, keyCol: String = "doc_id",
       partitionCol: String = "processing_level"): Boolean = {
-    batch.write.mode("append").parquet(s"$tableDir/log")
-    val pending = pendingLog(spark, tableDir)
-    val pendingD = pending.distinct()
+    val wm = watermark(spark, tableDir)
+    batch.write.mode("append").parquet(segment(tableDir, wm).toString)
+    val pending = pendingIn(spark, tableDir, wm)
     // the trigger check and the watermark candidate in one query
-    val sizeAndMax = pendingD.agg(count(lit(1)), max("seq")).head()
-    if (sizeAndMax.getLong(0) < threshold) return false
-    val maxSeq = sizeAndMax.getLong(1)
-    CatalogCompaction.compact(spark, s"$tableDir/base", pendingD,
+    val sizeAndMax = pending.distinct().agg(count(lit(1)), max("seq")).head()
+    val n = sizeAndMax.getLong(0)
+    if (n == 0 || n < threshold) return false
+    CatalogCompaction.compact(spark, s"$tableDir/base", pending,
       keyCol, partitionCol)
     CatalogIO.writeAtomically(spark, s"$tableDir/$marker",
-      maxSeq.toString.getBytes("UTF-8"))
+      sizeAndMax.getLong(1).toString.getBytes("UTF-8"))
     true
   }
 
@@ -94,7 +142,10 @@ object CompactionLoop {
     * versioned table — append into month segments, and when the
     * pending log (eff beyond the latest snapshot) crosses `threshold`
     * rows, CHECKPOINT at the log's max eff and VACUUM with
-    * `retentionDays`. Returns the vacuum stats when maintenance ran.
+    * `retentionDays`. A threshold ≤ 0 runs maintenance on every batch
+    * that leaves anything pending; a batch with nothing pending has
+    * nothing to checkpoint and runs none. Returns the vacuum stats
+    * when maintenance ran.
     *
     * Replay safety ACROSS the vacuum (StreamingSpec family #18): a
     * replayed batch re-appends duplicate records — the (eff, seq)
@@ -114,16 +165,19 @@ object CompactionLoop {
     val snaps = CatalogVacuum.snapshots(spark, tablePath)
     require(snaps.nonEmpty,
       s"CatalogVacuum.init the table at $tablePath before streaming")
-    val latest = snaps.max
-    val log = spark.read.parquet(s"$tablePath/log")
-    // duplicates from replayed batches count once toward the trigger
-    val pending = log.where(col("eff") > to_date(lit(latest)))
-      .distinct().count()
-    if (pending < threshold) None
+    // the trigger count (duplicates from replayed batches count once)
+    // and the checkpoint watermark in one aggregate over the pending
+    // slice: when anything is pending its max eff is the whole log's,
+    // since every other record has eff ≤ the latest snapshot
+    val pending = spark.read.parquet(s"$tablePath/log")
+      .where(col("eff") > to_date(lit(snaps.max)))
+      .distinct()
+      .agg(count(lit(1)), max(date_format(col("eff"), "yyyy-MM-dd")))
+      .head()
+    val n = pending.getLong(0)
+    if (n == 0 || n < threshold) None
     else {
-      val wm = log.agg(max(date_format(col("eff"), "yyyy-MM-dd")))
-        .head().getString(0)
-      CatalogVacuum.checkpoint(spark, tablePath, wm, keyCol)
+      CatalogVacuum.checkpoint(spark, tablePath, pending.getString(1), keyCol)
       Some(CatalogVacuum.vacuum(spark, tablePath, retentionDays))
     }
   }

@@ -127,7 +127,7 @@ class CatalogCompactionSpec extends GraftSpec {
     val stats = CatalogCompaction.compact(spark, dir, log12,
       targetRowsPerFile = 8L)
     assert(stats.touchedPartitions == Seq("1", "2"))
-    // dynamic overwrite never rewrote level 3
+    // the swap never rewrote level 3
     assert(files("3") == level3Before)
     // hard cap: no file in a rewritten partition exceeds the target
     Seq("1", "2").foreach { lvl =>
