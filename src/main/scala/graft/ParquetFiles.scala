@@ -75,6 +75,16 @@ object ParquetFiles {
     try read(reader) finally reader.close()
   }
 
+  /** Rows in the parquet files under `path`, summed from their footers
+    * on the driver (zero when `path` does not exist).
+    */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    list(spark, path).map(withReader(_, conf)(
+      _.getFooter.getBlocks.asScala.map(_.getRowCount).sum)).sum
+  }
+
   /** Run `read` over each item's file on executors (at most 32 tasks):
     * the listing stays driver-side, footer decoding is distributed.
     */

@@ -81,12 +81,8 @@ object Tables {
   def parquetRowCount(spark: SparkSession, dir: String,
       name: String): Long =
     JvmMemo.getOrCompute("rows", name, dir) {
-      import scala.jdk.CollectionConverters._
-      val conf = spark.sparkContext.hadoopConfiguration
-      java.lang.Long.valueOf(ParquetFiles.list(spark, s"$dir/$name.parquet")
-        .map(ParquetFiles.withReader(_, conf)(
-          _.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
-        .sum)
+      java.lang.Long.valueOf(
+        ParquetFiles.rowCount(spark, s"$dir/$name.parquet"))
     }.longValue()
 
   /** Saturated-cluster profile dial: `spark.graft.clusterSaturated`

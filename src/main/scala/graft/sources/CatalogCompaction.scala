@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 import graft.ParquetFiles
 
 /** Catalog compaction: fold the append-only CDC change log back into
@@ -121,8 +120,10 @@ object CatalogCompaction {
     * dynamic partition overwrite commit, and they share its window: a
     * reader listing the base between one partition's delete and its
     * rename sees that partition empty, and a run that stops there
-    * leaves the staged directory as the partition's only copy. The next
-    * run therefore starts by renaming back every partition of a
+    * (the process dies, or a delete or rename fails) leaves the staged
+    * directory as the partition's only copy, so a failed swap keeps the
+    * staging copy; a failure before the swap starts deletes it. The
+    * next run therefore starts by renaming back every partition of a
     * committed (`_SUCCESS`) stale staging copy whose base directory is
     * missing, then deletes the rest of it; a staging copy whose write
     * never committed is deleted unread. Base partitions the stopped run
@@ -139,6 +140,9 @@ object CatalogCompaction {
     def rename(src: Path, dst: Path): Unit =
       if (!fs.rename(src, dst))
         throw new IllegalStateException(s"rename $src -> $dst failed")
+    def delete(p: Path): Unit =
+      if (!fs.delete(p, true) && fs.exists(p))
+        throw new IllegalStateException(s"delete $p failed")
     // finish a stopped run's swap before the base is listed
     val staging = new Path(basePath + ".compact-staging")
     if (fs.exists(new Path(staging, "_SUCCESS")))
@@ -171,33 +175,31 @@ object CatalogCompaction {
 
     def dir(root: String, v: String) = new Path(root,
       ExternalCatalogUtils.getPartitionPathString(partitionCol, v))
-    val rowBound = touched.map(v => footerRows(spark, dir(basePath, v))).sum +
+    val rowBound = touched.map(v =>
+      ParquetFiles.rowCount(spark, dir(basePath, v).toString)).sum +
       perPart.map(_._2).sum
     val merged = mergeOnRead(
       base.where(col(partitionCol).isin(touched: _*)), log, keyCol)
-    try {
+    // until the swap starts the base is untouched, so a failure drops
+    // the staging copy
+    val (survived, removed, rowsWritten) = try {
       writeCompacted(merged, staging.toString, partitionCol, rowBound,
         targetRowsPerFile)
       val (survived, removed) =
         touched.partition(v => fs.exists(dir(staging.toString, v)))
-      val rowsWritten =
-        survived.map(v => footerRows(spark, dir(staging.toString, v))).sum
-      touched.foreach { v =>
-        fs.delete(dir(basePath, v), true)
-        if (survived.contains(v))
-          rename(dir(staging.toString, v), dir(basePath, v))
-      }
-      CompactStats(touched, removed, rowsWritten)
-    } finally fs.delete(staging, true)
-  }
-
-  /** Rows in the parquet files under `dir`, summed from their footers
-    * on the driver (zero when `dir` does not exist).
-    */
-  private def footerRows(spark: SparkSession, dir: Path): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    ParquetFiles.list(spark, dir.toString).map(ParquetFiles.withReader(_, conf)(
-      _.getFooter.getBlocks.asScala.map(_.getRowCount).sum)).sum
+      (survived, removed, survived.map(v =>
+        ParquetFiles.rowCount(spark, dir(staging.toString, v).toString)).sum)
+    } catch { case e: Throwable => fs.delete(staging, true); throw e }
+    // from the first delete on, a staged directory may be its
+    // partition's only copy: a failure leaves the staging copy for the
+    // next run's rename-back
+    touched.foreach { v =>
+      delete(dir(basePath, v))
+      if (survived.contains(v))
+        rename(dir(staging.toString, v), dir(basePath, v))
+    }
+    fs.delete(staging, true)
+    CompactStats(touched, removed, rowsWritten)
   }
 
   /** Write the merged state of the touched partitions, partitioned by

@@ -45,15 +45,24 @@ import graft.sources.{CatalogCompaction, CatalogIO, CatalogVacuum}
   * a retention decision this loop does not make. When the live
   * segment does not exist yet, nothing is pending and the view is the
   * base alone, cast to the log's column types so the view's schema
-  * does not depend on whether anything is pending.
+  * does not depend on whether anything is pending. A table with
+  * parquet files directly under `log/` (the layout before segments) is
+  * rejected whenever the live segment is missing, which includes the
+  * first call on such a table: its pending records would otherwise
+  * never be read.
   *
   * Crash windows: a run that compacts but stops before the marker
   * write leaves the watermark behind, so the next batch appends to the
   * same segment and the pending slice re-offers the folded records.
   * The fold keeps the latest seq per key over base and log, and the
   * whole segment is still there, so re-applying them yields the same
-  * state. A compaction stopped mid-swap is finished by the next one
-  * (`CatalogCompaction.compact`).
+  * state. A compaction stopped mid-swap (the process died, or a
+  * delete or rename failed) is finished by the next one
+  * (`CatalogCompaction.compact`); until then a read sees the
+  * partitions it deleted but had not renamed back as empty, the window
+  * Spark's dynamic overwrite leaves when its commit stops. The next
+  * batch closes it: the watermark did not move, so the pending slice
+  * still crosses the threshold and that batch compacts again.
   *
   * Scale: the trigger check is one aggregate query over the pending
   * slice that returns its row count and its max `seq` (the watermark
@@ -77,37 +86,51 @@ object CompactionLoop {
   private def segment(tableDir: String, wm: Long) =
     new Path(s"$tableDir/log/through=$wm")
 
-  private def pendingIn(spark: SparkSession, tableDir: String,
-      wm: Long): DataFrame = {
-    val seg = segment(tableDir, wm)
-    if (!fs(spark, tableDir).exists(seg)) null
-    else spark.read.parquet(seg.toString).where(col("seq") > wm)
+  /** The log's segments. A table whose `log/` also holds flat
+    * parquet files was written before the log had segments; this loop
+    * would never read those files' pending records, so such a table
+    * fails here rather than serve a view without them.
+    */
+  private def segments(spark: SparkSession, tableDir: String): Seq[Path] = {
+    val log = new Path(s"$tableDir/log")
+    val f = fs(spark, tableDir)
+    val entries =
+      if (f.exists(log)) f.listStatus(log).toSeq.map(_.getPath) else Nil
+    val flat = entries.filter(_.getName.endsWith(".parquet"))
+    require(flat.isEmpty, s"$log holds change records outside any " +
+      s"through=<watermark> segment (${flat.headOption.getOrElse("")}): " +
+      "a flat change log is not supported")
+    entries.filter(_.getName.startsWith("through="))
   }
+
+  /** A live segment's pending rows: those past the watermark. */
+  private def slice(spark: SparkSession, seg: Path, wm: Long): DataFrame =
+    spark.read.parquet(seg.toString).where(col("seq") > wm)
 
   /** Change records not yet folded into the base: the live segment's
     * `seq > watermark` rows (replayed duplicates of folded batches
     * filter out here — the exactly-once boundary); null when the live
     * segment does not exist, i.e. nothing is pending.
     */
-  def pendingLog(spark: SparkSession, tableDir: String): DataFrame =
-    pendingIn(spark, tableDir, watermark(spark, tableDir))
+  def pendingLog(spark: SparkSession, tableDir: String): DataFrame = {
+    val wm = watermark(spark, tableDir)
+    val live = segment(tableDir, wm)
+    if (fs(spark, tableDir).exists(live)) slice(spark, live, wm)
+    else { segments(spark, tableDir); null } // rejects a flat log
+  }
 
   /** The merge-on-read view: compacted base + pending changes. */
   def view(spark: SparkSession, tableDir: String,
       keyCol: String = "doc_id"): DataFrame = {
     val base = spark.read.parquet(s"$tableDir/base")
-    val pending = pendingLog(spark, tableDir)
-    if (pending != null)
-      CatalogCompaction.mergeOnRead(base, pending, keyCol)
-    else {
+    val wm = watermark(spark, tableDir)
+    val live = segment(tableDir, wm)
+    if (fs(spark, tableDir).exists(live))
+      CatalogCompaction.mergeOnRead(base, slice(spark, live, wm), keyCol)
+    else segments(spark, tableDir) match {
+      case Nil => base
       // nothing pending: the newest folded segment gives the log's types
-      val log = new Path(s"$tableDir/log")
-      val f = fs(spark, tableDir)
-      val segs = if (!f.exists(log)) Array.empty[Path]
-        else f.listStatus(log).map(_.getPath)
-          .filter(_.getName.startsWith("through="))
-      if (segs.isEmpty) base
-      else CatalogCompaction.alignToLog(base, spark.read.parquet(
+      case segs => CatalogCompaction.alignToLog(base, spark.read.parquet(
         segs.maxBy(_.getName.stripPrefix("through=").toLong).toString))
     }
   }
@@ -123,8 +146,11 @@ object CompactionLoop {
       threshold: Long, keyCol: String = "doc_id",
       partitionCol: String = "processing_level"): Boolean = {
     val wm = watermark(spark, tableDir)
-    batch.write.mode("append").parquet(segment(tableDir, wm).toString)
-    val pending = pendingIn(spark, tableDir, wm)
+    val live = segment(tableDir, wm)
+    if (!fs(spark, tableDir).exists(live))
+      segments(spark, tableDir) // rejects a flat log
+    batch.write.mode("append").parquet(live.toString)
+    val pending = slice(spark, live, wm)
     // the trigger check and the watermark candidate in one query
     val sizeAndMax = pending.distinct().agg(count(lit(1)), max("seq")).head()
     val n = sizeAndMax.getLong(0)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -229,6 +229,48 @@ class CompactionLoopSpec extends GraftSpec with AdaptiveSparkPlanHelper {
       assert(viewState(dir2) == fold(base60, b1 ++ b2))
       assert(baseState(dir2) == fold(base60, b1 ++ b2))
     } finally deleteTempLayout(dir2)
+
+    // the swap's own rename fails after level 2's base directory was
+    // deleted: the staged copy, level 2's only copy, must outlive the
+    // failure, and the next compaction renames it back
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${FailingRenameFs.uri.getScheme}.impl",
+      classOf[FailingRenameFs].getName)
+    val dir3 = newTable(base60)
+    val table = s"${FailingRenameFs.uri.getScheme}://$dir3"
+    try {
+      assert(!CompactionLoop.onBatch(spark, table, batchDf(b1), 100L))
+      FailingRenameFs.failRenameTo = Some(s"$dir3/base/processing_level=2")
+      try intercept[IllegalStateException](
+        CompactionLoop.onBatch(spark, table, batchDf(b2), 1L))
+      finally FailingRenameFs.failRenameTo = None
+      assert(!fs.exists(new Path(s"$dir3/base/processing_level=2")))
+      assert(fs.exists(
+        new Path(s"$dir3/base.compact-staging/processing_level=2")))
+      // until the next batch a read sees level 2 empty (the mid-swap
+      // window); the watermark did not move, so the pending slice still
+      // crosses the threshold and that batch compacts again
+      assert(CompactionLoop.watermark(spark, table) == -1L)
+      assert(CompactionLoop.onBatch(spark, table, batchDf(b3), 1L))
+      assert(viewState(table) == fold(base60, b1 ++ b2 ++ b3))
+      assert(baseState(table) == fold(base60, b1 ++ b2 ++ b3))
+      assert(!fs.exists(new Path(s"$dir3/base.compact-staging")))
+    } finally deleteTempLayout(dir3)
+  }
+
+  test("a table whose log holds flat parquet files is rejected, not " +
+      "read without its pending records") {
+    val dir = newTable(base60)
+    try {
+      batchDf(b1).write.parquet(s"$dir/log")
+      for (call <- Seq[() => Any](
+          () => CompactionLoop.onBatch(spark, dir, batchDf(b2), 1L),
+          () => CompactionLoop.pendingLog(spark, dir),
+          () => CompactionLoop.view(spark, dir))) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("flat change log"), e.getMessage)
+      }
+    } finally deleteTempLayout(dir)
   }
 
   private def scannedRoots(df: DataFrame): Seq[String] = {
@@ -318,4 +360,29 @@ class CompactionLoopSpec extends GraftSpec with AdaptiveSparkPlanHelper {
       assert(viewState(dir) == fold(base60, b1 ++ b2 ++ b3))
     } finally deleteTempLayout(dir)
   }
+}
+
+/** The local filesystem under its own scheme, whose rename onto the
+  * path in `FailingRenameFs.failRenameTo` returns false: a swap step
+  * that fails inside the process, not by the process dying.
+  */
+class FailingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = FailingRenameFs.uri
+  override def getScheme: String = FailingRenameFs.uri.getScheme
+  override def rename(src: Path, dst: Path): Boolean =
+    if (FailingRenameFs.failRenameTo.contains(dst.toUri.getPath)) false
+    else super.rename(src, dst)
+  // plain statuses: the local ones load their permissions through a
+  // `file:` URI, which this scheme is not
+  private def plain(s: FileStatus) = new FileStatus(s.getLen, s.isDirectory,
+    s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(plain)
+  override def getFileStatus(f: Path): FileStatus =
+    plain(super.getFileStatus(f))
+}
+
+object FailingRenameFs {
+  val uri: java.net.URI = java.net.URI.create("graftfailrename:///")
+  @volatile var failRenameTo: Option[String] = None
 }

@@ -3,14 +3,15 @@
 
 Usage, from the root of a checkout:
 
-    python3 tools/perfpairs.py --workload catalog-churn --pairs 10 \
-        [--ref HEAD~1] [--seconds 12] [--first-seed 1] [--claim read_p50_s]
+    python3 tools/perfpairs.py --workload catalog-churn --ref <parent> \
+        [--pairs 10] [--seconds 12]
 
-The parent side is the committed tree of `--ref` (default `HEAD~1`),
-extracted with `git archive` into a temporary directory that is removed
-at exit; the change side is this checkout as it stands. Pair `i` runs
-`perfbench/run.py --seed <first-seed + i> --trace 0` once on each side,
-the parent first on even pairs and the change first on odd ones. Both
+The parent side is the committed tree of `--ref`, extracted with
+`git archive` into a temporary directory that is removed at exit; the
+change side is this checkout as it stands, committed or not, so name
+the change's parent commit explicitly. Pair `i` (from 1) runs
+`perfbench/run.py --seed <i> --trace 0` once on each side, the parent
+first on odd pairs and the change first on even ones. Both
 sides build into this checkout's `.bench_build/` (outputs are keyed by a
 digest of their sources, so the parent's build is reused by later runs).
 
@@ -18,10 +19,9 @@ For every end-to-end metric of BENCHMARK.json it prints each side's
 median [q1, q3], the change in percent, the change's wins out of the
 pairs (ties count for neither), whether the gain rule holds (wins in at
 least nine tenths of the pairs and a median gap wider than the parent's
-quartile distance) and whether the metric stays within its bound. With
-`--claim`, the exit code is 3 unless every named metric meets the gain
-rule. The exit code is 2 when any run is incorrect, fails an operation
-or cannot finish. Only BENCHMARK.json and perfbench/ are read.
+quartile distance) and whether the metric stays within its bound. The
+exit code is 2 when any run is incorrect, fails an operation or cannot
+finish. Only BENCHMARK.json and perfbench/ are read.
 """
 import argparse
 import json
@@ -82,16 +82,11 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True, choices=workloads)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--ref", default="HEAD~1")
+    ap.add_argument("--ref", required=True,
+                    help="the change's parent commit")
     ap.add_argument("--seconds", type=int, default=bench["run_seconds"])
-    ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--claim", action="append", default=[],
-                    help="an end-to-end metric the change claims to improve")
     args = ap.parse_args()
     metrics = bench["end_to_end"]
-    unknown = set(args.claim) - {m["name"] for m in metrics}
-    if unknown:
-        ap.error(f"not an end-to-end metric: {', '.join(sorted(unknown))}")
 
     runs = {"parent": [], "change": []}
     problems = []
@@ -99,16 +94,16 @@ def main():
         parent = Path(tmp) / "parent"
         extract(args.ref, parent)
         sides = {"parent": parent, "change": ROOT}
-        for i in range(args.pairs):
-            seed = args.first_seed + i
-            order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for seed in range(1, args.pairs + 1):
+            order = (("parent", "change") if seed % 2 else
+                     ("change", "parent"))
             for side in order:
                 res, problem = run_one(sides[side], args.workload, seed,
                                        args.seconds)
                 if problem:
                     problems.append(f"{side} seed {seed}: {problem}")
                 runs[side].append(res["metrics"] if res else None)
-                print(f"[perfpairs] pair {i + 1}/{args.pairs} seed {seed} "
+                print(f"[perfpairs] pair {seed}/{args.pairs} "
                       f"{side}: {problem or 'ok'}", file=sys.stderr, flush=True)
 
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"])
@@ -118,7 +113,6 @@ def main():
     print(f"{'metric':<12} {'parent median [q1, q3]':>28} "
           f"{'change median [q1, q3]':>28} {'delta':>8} {'wins':>6} "
           f"{'gain':>5} {'bound':>6}")
-    failed_claims = []
     for m in metrics:
         name, bound = m["name"], m["bound"]
         lower = m["better"] == "lower"
@@ -133,20 +127,13 @@ def main():
         gap = (pmed - cmed) if lower else (cmed - pmed)
         gain = wins * 10 >= 9 * len(both) and gap > pq3 - pq1
         within = (-delta if not lower else delta) <= bound
-        if name in args.claim and not gain:
-            failed_claims.append(name)
         print(f"{name:<12} {pmed:>10.4g} [{pq1:.4g}, {pq3:.4g}]".ljust(41) +
               f"{cmed:>10.4g} [{cq1:.4g}, {cq3:.4g}]".ljust(29) +
               f"{delta * 100:>+7.1f}% {wins:>3}/{len(both):<2} "
               f"{'yes' if gain else 'no':>5} {'ok' if within else 'WORSE':>6}")
     for p in problems:
         print(f"PROBLEM {p}")
-    if problems:
-        return 2
-    if failed_claims:
-        print(f"claimed gain not shown: {', '.join(failed_claims)}")
-        return 3
-    return 0
+    return 2 if problems else 0
 
 
 if __name__ == "__main__":
